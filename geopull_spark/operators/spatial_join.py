@@ -18,6 +18,11 @@ Round-2 layout (reworked from the r1 plan per VERDICT/ADVICE):
 * cover resolution is adaptive per block: oversized geometries (a region with
   no streets → one region-sized block) index at a coarser res instead of
   raising (ADVICE r1 cover-cap fix); docs probe all resolutions present.
+* a doc batch pays only for itself (:func:`doc_cells`): each point is
+  quantized once and its parent cell and its cell at every index res are
+  shifts of that one code; the index's resolutions join the doc side as an
+  in-plan broadcast, so a call makes no driver round trip before the job
+  that computes its rows.
 * the boundary tie-break (min block_id) happens inside the refine kernel —
   a doc's candidates all share one (pcell, salt) group, so no extra shuffle.
 
@@ -128,12 +133,6 @@ def build_block_cell_index(blocks: DataFrame, res: int = INDEX_RES,
     return blocks.select("region_code", "block_id", "geometry").mapInPandas(gen, schema)
 
 
-def index_res_list(block_cells: DataFrame) -> list[int]:
-    """Distinct cover resolutions present in an index (usually one; more when
-    adaptive lowering kicked in). Tiny metadata aggregate."""
-    return sorted(r["cell_res"] for r in block_cells.select("cell_res").distinct().collect())
-
-
 def build_refine_geometry(blocks: DataFrame, parent_res: int = PARENT_RES) -> DataFrame:
     """Geometry side of the refine cogroup: each block's WKB keyed by its
     FIXED-res parent-cell cover — (g_pcell, g_block_id, g_geometry). Like the
@@ -152,9 +151,26 @@ def build_refine_geometry(blocks: DataFrame, parent_res: int = PARENT_RES) -> Da
     ).select("g_pcell", "g_block_id", "g_geometry")
 
 
-def docs_with_cell(docs: DataFrame, res: int = INDEX_RES) -> DataFrame:
-    """Point cell id, JVM-side (kept for single-res probes: streaming, tests)."""
-    return docs.withColumn("cell", cellexpr.cell_expr(F.col("lon"), F.col("lat"), res))
+def doc_cells(docs: DataFrame, block_cells: DataFrame) -> DataFrame:
+    """Probe side of the cell join: ``docs`` (which carry lon, lat) plus
+    ``pcell`` and ``cell``, one row per (doc, resolution present in
+    ``block_cells``).
+
+    Each point is quantized once (``cellexpr.with_point_morton``); its parent
+    cell and its cell at every index resolution are shifts of that one code.
+    The index's distinct ``cell_res`` values reach the doc side as a broadcast
+    inside the plan, so building the probe needs no driver round trip, and an
+    empty index yields no rows."""
+    res = block_cells.select(F.col("cell_res").alias("_res")).distinct()
+    return (
+        cellexpr.with_point_morton(docs, out="_morton")
+        .crossJoin(F.broadcast(res))
+        .select(
+            *docs.columns,
+            cellexpr.cell_at_expr("_morton", PARENT_RES).alias("pcell"),
+            cellexpr.cell_at_expr("_morton", "_res").alias("cell"),
+        )
+    )
 
 
 _REFINE_SCHEMA = T.StructType(
@@ -271,20 +287,7 @@ def assign_docs_to_blocks(
         blocks = _ensure_bbox(blocks)
     if block_cells is None:
         block_cells = build_block_cell_index(blocks, res)
-    res_list = index_res_list(block_cells)
-    if not res_list:
-        return docs.select("doc_id", "lon", "lat").limit(0).withColumn(
-            "block_id", F.lit(None).cast("string")
-        ).select("doc_id", "lon", "lat", "block_id")
-    d = docs.select("doc_id", "lon", "lat").withColumn(
-        "pcell", cellexpr.cell_expr(F.col("lon"), F.col("lat"), PARENT_RES)
-    )
-    if len(res_list) == 1:
-        d = d.withColumn("cell", cellexpr.cell_expr(F.col("lon"), F.col("lat"), res_list[0]))
-    else:
-        d = d.withColumn(
-            "cell", F.explode(cellexpr.cells_at_expr(F.col("lon"), F.col("lat"), res_list))
-        )
+    d = doc_cells(docs.select("doc_id", "lon", "lat"), block_cells)
     has_interior = "interior" in block_cells.columns
     if has_interior:
         bc_narrow = block_cells.select("cell", "block_id", "interior")
@@ -316,8 +319,12 @@ def assign_docs_to_blocks(
     use_copart = (
         _plan == "copart"
         and salt_k <= 1 and not has_interior and not broadcast_index
-        and min(res_list) >= PARENT_RES
     )
+    if use_copart:
+        # the one driver probe left, paid only by this opt-in plan: it needs
+        # every index cell at or below pcell granularity
+        lo = block_cells.agg(F.min("cell_res")).first()[0]
+        use_copart = lo is not None and lo >= PARENT_RES
     if use_copart:
         spark = docs.sparkSession
         npart = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -543,18 +550,7 @@ def assign_docs_broadcast(
     blocks = _ensure_bbox(blocks)
     if block_cells is None:
         block_cells = build_block_cell_index(blocks, res)
-    res_list = index_res_list(block_cells)
-    if not res_list:
-        return docs.select("doc_id", "lon", "lat").limit(0).withColumn(
-            "block_id", F.lit(None).cast("string")
-        ).select("doc_id", "lon", "lat", "block_id")
-    d = docs.select("doc_id", "lon", "lat")
-    if len(res_list) == 1:
-        d = d.withColumn("cell", cellexpr.cell_expr(F.col("lon"), F.col("lat"), res_list[0]))
-    else:
-        d = d.withColumn(
-            "cell", F.explode(cellexpr.cells_at_expr(F.col("lon"), F.col("lat"), res_list))
-        )
+    d = doc_cells(docs.select("doc_id", "lon", "lat"), block_cells)
     cand = d.join(
         F.broadcast(block_cells.select("cell", "block_id")), "cell", "inner"
     ).select("doc_id", "lon", "lat", "block_id")
@@ -724,14 +720,15 @@ def cell_tile_areas(blocks: DataFrame, res: int = INDEX_RES) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _ring_guarantee_expr(lon, lat, res: int, ring: int):
-    """Degree-space distance from a point to the boundary of its k-ring cell
-    box — results with kth-distance within this are provably exact (no
-    neighbor outside the probed cells can be closer). Conservative at the
-    antimeridian (wrapped ring coverage is ignored) and infinite at clamped
-    poles / full-longitude coverage."""
+def _ring_guarantee_expr(lon: str, lat: str, res: int, ring: int):
+    """Degree-space distance from a point (columns ``lon``, ``lat``) to the
+    boundary of its k-ring cell box — results with kth-distance within this
+    are provably exact (no neighbor outside the probed cells can be closer).
+    Conservative at the antimeridian (wrapped ring coverage is ignored) and
+    infinite at clamped poles / full-longitude coverage."""
     n = 1 << res
     ix, iy = cellexpr.ixy_expr(lon, lat, res)
+    lon, lat = F.col(lon), F.col(lat)
     big = F.lit(1e9)
     if 2 * ring + 1 >= n:
         g_lon = big
@@ -772,7 +769,7 @@ def _knn_ring_pass(pts: DataFrame, base: DataFrame, k: int, res: int, ring: int,
     ).dropDuplicates([id_col, "nbr_id"])
     w = Window.partitionBy(id_col).orderBy(F.col("dist2").asc(), F.col("nbr_id").asc())
     topk = cand.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k)
-    g = _ring_guarantee_expr(F.col("lon"), F.col("lat"), res, ring)
+    g = _ring_guarantee_expr("lon", "lat", res, ring)
     wmax = Window.partitionBy(id_col)
     return (
         topk.withColumn("kth_dist2", F.max("dist2").over(wmax))

@@ -8,6 +8,7 @@ kernels, shuffle partitions sized to cores rather than the 200 default.
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import SparkSession
 
@@ -74,10 +75,13 @@ def get_spark(
     if worker_py is None:
         wrapper = os.path.join(os.path.dirname(os.path.abspath(__file__)), "pyworker.sh")
         if os.access(wrapper, os.X_OK):
-            # wrap whatever interpreter was configured (default "python")
+            # wrap whatever interpreter was configured; with none configured,
+            # the driver's own (a bare "python" may be absent or another one)
             prev = os.environ.get("PYSPARK_PYTHON")
             if prev and os.path.basename(prev) != "pyworker.sh":
                 os.environ["GEOPULL_BASE_PYTHON"] = prev
+            else:
+                os.environ.setdefault("GEOPULL_BASE_PYTHON", sys.executable)
             worker_py = wrapper
     if worker_py:
         # pyspark resolves the worker interpreter from PYSPARK_PYTHON at

@@ -103,7 +103,7 @@ class SnapshotTable:
             "schema": written.schema.jsonValue(),
             "lineage": lineage or [],
             "operation": "overwrite",
-            "file_stats": _harvest_file_stats(data_dir),
+            "file_stats": _harvest_footers(data_dir)[0],
         }
         self._write_manifest(manifest)
         return manifest
@@ -141,10 +141,10 @@ class SnapshotTable:
         from pyspark.sql import types as T
 
         prev_schema = T.StructType.fromJson(prev["schema"])
-        # compare names+types only: nullability legitimately drifts across
-        # parquet round-trips and does not affect union-read correctness
-        _sig = lambda s: [(f.name, f.dataType) for f in s.fields]
-        if _sig(df.schema) != _sig(prev_schema):
+        # compare names+types only: nullability (nested too — array elements,
+        # map values, struct fields) legitimately drifts across parquet
+        # round-trips and does not affect union-read correctness
+        if _all_nullable(df.schema) != _all_nullable(prev_schema):
             raise ValueError(
                 "append: batch schema does not match the table schema — "
                 f"table {prev_schema.simpleString()} vs batch "
@@ -160,11 +160,11 @@ class SnapshotTable:
         for c in bloom_cols or []:
             writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true")
         writer.parquet(delta_dir)
-        spark = df.sparkSession
-        delta_rows = spark.read.parquet(delta_dir).count()
+        # the footers give the batch's row count: no read-back of the batch
+        delta_stats, delta_rows = _harvest_footers(delta_dir)
         prev_files = prev.get("files") or _list_parquet(prev["data_dir"])
         stats = dict(prev.get("file_stats") or {})
-        stats.update(_harvest_file_stats(delta_dir))
+        stats.update(delta_stats)
         manifest = {
             "snapshot_id": sid,
             "parent_id": prev["snapshot_id"],
@@ -316,7 +316,7 @@ class SnapshotTable:
             "files": _list_parquet(data_dir),
             "schema": rewritten.schema.jsonValue(),
             "operation": "compact",
-            "file_stats": _harvest_file_stats(data_dir),  # not the old files'
+            "file_stats": _harvest_footers(data_dir)[0],  # not the old files'
         }
         self._write_manifest(manifest)
         return manifest
@@ -329,20 +329,21 @@ def _list_parquet(data_dir: str) -> list[str]:
     )
 
 
-def _harvest_file_stats(data_dir: str) -> dict:
+def _harvest_footers(data_dir: str) -> tuple[dict, int]:
     """Per-file column min/max from parquet footers (metadata-only I/O —
     a few KB per file regardless of data size), keyed by FULL path so
-    appended snapshots can union stats across data dirs. Top-level
-    primitive int/float/string columns only; others are simply absent from
-    the stats map, which read_range treats as 'must read'."""
+    appended snapshots can union stats across data dirs, plus the total row
+    count of the files. Top-level primitive int/float/string columns only;
+    others are simply absent from the stats map, which read_range treats as
+    'must read'."""
     import pyarrow.parquet as pq
 
     stats: dict[str, dict] = {}
+    rows = 0
     for fpath in _list_parquet(data_dir):
-        try:
-            md = pq.ParquetFile(fpath).metadata
-        except Exception:
-            continue  # unreadable footer → no stats, never block the commit
+        # an unreadable footer raises: the row count must cover every file
+        md = pq.ParquetFile(fpath).metadata
+        rows += md.num_rows
         per_col: dict[str, list] = {}
         for rg in range(md.num_row_groups):
             row = md.row_group(rg)
@@ -368,7 +369,22 @@ def _harvest_file_stats(data_dir: str) -> dict:
                 else:
                     per_col[name] = [mn, mx]
         stats[fpath] = per_col
-    return stats
+    return stats, rows
+
+
+def _all_nullable(dt):
+    """``dt`` with every nullability flag set, at every nesting depth."""
+    from pyspark.sql import types as T
+
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _all_nullable(f.dataType)) for f in dt.fields]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_all_nullable(dt.elementType))
+    if isinstance(dt, T.MapType):
+        return T.MapType(_all_nullable(dt.keyType), _all_nullable(dt.valueType))
+    return dt
 
 
 def _conform_to_schema(df: DataFrame, schema_json: dict) -> DataFrame:

@@ -26,9 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions import cellexpr
 from ..functions.geometry import st_contains_point
-from ..operators.spatial_join import INDEX_RES, build_block_cell_index, index_res_list
+from ..operators.spatial_join import INDEX_RES, build_block_cell_index, doc_cells
 
 DOC_STREAM_SCHEMA = T.StructType(
     [
@@ -58,15 +57,7 @@ def assign_stream(doc_stream: DataFrame, blocks: DataFrame,
     the sinks dedup (see module docstring)."""
     if block_cells is None:
         block_cells = build_block_cell_index(blocks, res)
-    res_list = index_res_list(block_cells) or [res]
-    if len(res_list) == 1:
-        d = doc_stream.withColumn(
-            "cell", cellexpr.cell_expr(F.col("lon"), F.col("lat"), res_list[0])
-        )
-    else:
-        d = doc_stream.withColumn(
-            "cell", F.explode(cellexpr.cells_at_expr(F.col("lon"), F.col("lat"), res_list))
-        )
+    d = doc_cells(doc_stream, block_cells)
     idx_geo = block_cells.select("cell", "region_code", "block_id").join(
         blocks.select(F.col("block_id"), F.col("geometry")), "block_id"
     )

@@ -6,10 +6,10 @@ disagreeing bit would silently drop candidates at cell boundaries."""
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from geopull_spark.functions import cellexpr
 from geopull_spark.kernels import cells as kc
+from geopull_spark.operators import spatial_join
 from geopull_spark.session import get_spark
 
 
@@ -18,28 +18,69 @@ def spark():
     return get_spark(app_name="cellexpr_tests", master="local[4]", shuffle_partitions=4)
 
 
-def test_cell_expr_matches_numpy(spark):
+def test_point_cells_match_numpy(spark):
     rng = np.random.default_rng(42)
     lon = rng.uniform(-179.99, 179.99, 3000)
     lat = rng.uniform(-89.99, 89.99, 3000)
     df = spark.createDataFrame(pd.DataFrame({"lon": lon, "lat": lat}))
     for res in (0, 7, 10, 14, 28):
-        got = np.array([r[0] for r in df.select(cellexpr.cell_expr(F.col("lon"), F.col("lat"), res)).collect()])
+        got = np.array([r[0] for r in cellexpr.with_cell(df, res).select("cell").collect()])
         assert (got == kc.cell_id(lon, lat, res)).all(), res
 
 
-def test_cells_at_and_parent_expr_match_numpy(spark):
+def _doc_cells(spark, lon, lat, res_list):
+    """spatial_join.doc_cells against an index holding one cell per res."""
+    docs = spark.createDataFrame(pd.DataFrame(
+        {"doc_id": [str(i) for i in range(len(lon))], "lon": lon, "lat": lat}))
+    index = spark.createDataFrame([(0, r) for r in res_list], "cell long, cell_res int")
+    return spatial_join.doc_cells(docs, index)
+
+
+def test_doc_cells_match_numpy_per_res_and_multi_res(spark):
+    """The probe side of the assignment join: pcell and the cell at every
+    index resolution, each derived by shifting one MAX_RES morton code."""
     rng = np.random.default_rng(7)
     lon = rng.uniform(-180, 180, 500)
     lat = rng.uniform(-90, 90, 500)
-    df = spark.createDataFrame(pd.DataFrame({"lon": lon, "lat": lat}))
-    rows = df.select(cellexpr.cells_at_expr(F.col("lon"), F.col("lat"), [8, 11, 14]).alias("a")).collect()
-    for i, r in enumerate(rows):
-        for j, res in enumerate([8, 11, 14]):
-            assert r["a"][j] == kc.cell_id(lon[i:i + 1], lat[i:i + 1], res)[0]
-    c = kc.cell_id(lon, lat, 14)
+    # the ends of the ranges, where the fraction clamps
+    lon[:4] = [-180.0, 180.0, 0.0, -0.0]
+    lat[:4] = [-90.0, 90.0, 0.0, 89.999999]
+    for res_list in ([0], [7], [10], [14], [28], [8, 11, 14]):
+        got = {}
+        for r in _doc_cells(spark, lon, lat, res_list).collect():
+            i = int(r["doc_id"])
+            assert r["pcell"] == kc.cell_id(lon[i:i + 1], lat[i:i + 1], spatial_join.PARENT_RES)[0]
+            got.setdefault(i, set()).add(r["cell"])
+        want = {i: {int(kc.cell_id(lon[i:i + 1], lat[i:i + 1], res)[0]) for res in res_list}
+                for i in range(len(lon))}
+        assert got == want, res_list
+
+
+def test_doc_cells_stay_small_in_the_plan(spark):
+    """Analyzed expression nodes of the probe projection. Every key reads
+    the quantized point by reference; the single-expression form of the
+    spread copied each axis' quantization 32 times per key (~2,400 nodes for
+    pcell + cell)."""
+    d = _doc_cells(spark, np.zeros(1), np.zeros(1), [14])
+
+    def nodes(plan):
+        n = sum(len(e.treeString().splitlines()) for e in _iter(plan.expressions()))
+        return n + sum(nodes(c) for c in _iter(plan.children()))
+
+    assert nodes(d._jdf.queryExecution().analyzed()) < 300
+
+
+def _iter(jseq):
+    it = jseq.iterator()
+    while it.hasNext():
+        yield it.next()
+
+
+def test_parent_expr_matches_numpy(spark):
+    rng = np.random.default_rng(7)
+    c = kc.cell_id(rng.uniform(-180, 180, 500), rng.uniform(-90, 90, 500), 14)
     dfc = spark.createDataFrame(pd.DataFrame({"cell": c}))
-    gp = np.array([r[0] for r in dfc.select(cellexpr.parent_expr(F.col("cell"), 14, 10)).collect()])
+    gp = np.array([r[0] for r in dfc.select(cellexpr.parent_expr("cell", 14, 10)).collect()])
     assert (gp == kc.cell_parent(c, 10)).all()
 
 

@@ -368,6 +368,22 @@ def test_assignment_handles_streetless_giant_block(spark):
     assert out.count() > 0.5 * docs.count()
 
 
+def test_assignment_against_empty_index_is_empty(spark):
+    """An index with no cells (e.g. a snapshot with no blocks) gives no
+    rows, with the assignment schema, from every plan that probes it."""
+    docs = synth.interleaved_documents(spark, SF).select("doc_id", "lon", "lat")
+    bc = spark.createDataFrame([], "cell long, cell_res int, region_code string, block_id string")
+    gc = spark.createDataFrame([], "g_pcell long, g_block_id string, g_geometry binary")
+    blocks = spark.createDataFrame(
+        [], "region_code string, block_id string, geometry binary, "
+        "minx double, miny double, maxx double, maxy double")
+    for out in (spatial_join.assign_docs_to_blocks(docs, None, bc, geom_cells=gc),
+                spatial_join.assign_docs_to_blocks(docs, None, bc, salt_k=4, geom_cells=gc),
+                spatial_join.assign_docs_broadcast(docs, blocks, bc)):
+        assert out.columns == ["doc_id", "lon", "lat", "block_id"]
+        assert out.count() == 0
+
+
 def test_ivf_recall_vs_brute(spark):
     """IVF-lite ANN must recover most of the exact top-k at equal candidate
     budget (n_probe=4 of 16 lists on the tiny fixture)."""

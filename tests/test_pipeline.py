@@ -3,10 +3,13 @@
 plus the target engine's span-sequence and determinism requirements.
 """
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from geopull_spark.functions import cellexpr
 from geopull_spark.functions.geometry import st_area_m2
 from geopull_spark.kernels import area as karea
 from geopull_spark.kernels import wkb as kwkb
@@ -323,7 +326,7 @@ def test_bucketed_cell_join_no_shuffle(spark, world, tmp_path):
 
     bc = spatial_join.build_block_cell_index(world["blocks"])
     docs = synth.interleaved_documents(spark, SF).select("doc_id", "lon", "lat")
-    d = spatial_join.docs_with_cell(docs)
+    d = cellexpr.with_cell(docs, spatial_join.INDEX_RES)
     old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -442,7 +445,7 @@ def test_assign_docs_steady_bucketed_identical(spark, world):
         # the bucketed index side of the candidate join must not re-shuffle:
         # its table scan appears with no Exchange directly above it
         bc = spark.table("t_steady_block_cells")
-        d = spatial_join.docs_with_cell(docs)
+        d = cellexpr.with_cell(docs, spatial_join.INDEX_RES)
         old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         try:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -589,6 +592,60 @@ def test_manifest_append_snapshots(spark, tmp_path):
     s3 = t.compact(spark, target_files=1)
     assert s3["row_count"] == 1500 and len(t.data_files()) == 1
     assert t.read(spark).count() == 1500
+
+
+def test_manifest_append_runs_one_job(spark, tmp_path):
+    """append writes the batch and takes its row count from the parquet
+    footers: one Spark job (the write), no read-back of the batch."""
+    from geopull_spark.sources.manifest import SnapshotTable
+
+    t = SnapshotTable(str(tmp_path / "one_job"))
+    t.commit(spark.range(0, 100).select(F.col("id").alias("k")), fingerprint="fp-base")
+    batch = spark.range(100, 350, numPartitions=3).select(F.col("id").alias("k")).cache()
+    batch.count()
+    sc = spark.sparkContext
+    sc.setJobGroup("manifest-append-one-job", "append under test")
+    try:
+        snap = t.append(batch, fingerprint="fp-d1")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        batch.unpersist()
+    # the status tracker is fed by the listener bus: drain it before reading
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    assert len(sc.statusTracker().getJobIdsForGroup("manifest-append-one-job")) == 1
+    assert snap["row_count"] == 350 == t.read(spark).count()
+
+
+def test_manifest_append_nested_type_ignores_nullability(spark, tmp_path):
+    """Nested nullability (here an array's containsNull) drifts across the
+    parquet round-trip that produced the table schema; it must not reject an
+    append. A different nested element type still must."""
+    from geopull_spark.sources.manifest import SnapshotTable
+
+    def batch(lo, hi, elem="bigint"):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("k"), F.array(F.col("id").cast(elem)).alias("sig"))
+
+    t = SnapshotTable(str(tmp_path / "nested"))
+    t.commit(batch(0, 10), fingerprint="fp-base")
+    assert not batch(10, 15).schema["sig"].dataType.containsNull
+    snap = t.append(batch(10, 15), fingerprint="fp-d1")
+    assert snap["row_count"] == 15
+    assert sorted(r["sig"][0] for r in t.read(spark).collect()) == list(range(15))
+    with pytest.raises(ValueError, match="schema does not match"):
+        t.append(batch(15, 20, elem="int"), fingerprint="fp-d2")
+
+
+def test_get_spark_defaults_worker_python_to_driver(spark, monkeypatch):
+    """With no PYSPARK_PYTHON configured, the worker wrapper runs the
+    driver's own interpreter, not whatever ``python`` is on PATH."""
+    import sys
+
+    for var in ("PYSPARK_PYTHON", "GEOPULL_BASE_PYTHON", "GEOPULL_WORKER_PYTHON"):
+        monkeypatch.delenv(var, raising=False)
+    get_spark(app_name="tests", master="local[4]", shuffle_partitions=4)
+    assert os.environ["GEOPULL_BASE_PYTHON"] == sys.executable
+    assert os.path.basename(os.environ["PYSPARK_PYTHON"]) == "pyworker.sh"
 
 
 def test_post_blocks_batched_bit_identical(world):
