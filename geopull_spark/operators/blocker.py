@@ -14,8 +14,10 @@ are cogrouped and the whole DAG runs as one Arrow-batched kernel per region:
                  but the correction path (boundary → re-polygonize →
                  difference → dissolve-by-id) is implemented for parity
   _residual_area_check(blocker.py:166-200): add back land − ∪blocks
-  _geohash_blocks(blocker.py:296-322): representative point → geohash12 →
-                 georank (cumcount per geohash, W1) → block_id
+  geohash ids    (blocker.py:296-322): representative point → geohash12 →
+                 georank (cumcount per geohash, W1) → block_id; here the
+                 flat post stage (_geohash_blocks_fast) plus a region-wide
+                 window, see below
 
 Determinism fix vs the reference (documented, SURVEY.md W1): pandas
 ``cumcount`` after the geohash sort breaks ties by prior row order; we order
@@ -177,40 +179,11 @@ def _remove_overlaps(blocks: list, areas: list, region: str,
     return out, out_areas
 
 
-def _geohash_blocks(blocks: list, areas: list, region: str | None,
-                    precision: int = 12, regions: list | None = None) -> pd.DataFrame:
-    """blocker.py:296-322 geohash + rep point + bbox; georank/block_id are
-    assigned downstream by a region-wide window (part-split invariant).
-    ``region`` broadcasts one region code to every row; ``regions`` supplies
-    per-row codes (the r6 flat post-stage, where one batch mixes regions)."""
-    if not blocks:
-        return pd.DataFrame(columns=BLOCKS_PRE_SCHEMA.fieldNames())
-    reps = np.array([representative_point(b[1]) for b in blocks])
-    ghs = geohash_encode(reps[:, 1], reps[:, 0], precision)
-    norm = [normalize_geom(b) for b in blocks]
-    wkbs = [_wkb.dumps(g) for g in norm]
-    bounds = np.array([_wkb.bounds(g) for g in norm])
-    return pd.DataFrame(
-        {
-            "region_code": regions if regions is not None else region,
-            "geohash": ghs,
-            "geometry": wkbs,
-            "area_m2": areas,
-            "rep_lon": reps[:, 0],
-            "rep_lat": reps[:, 1],
-            "minx": bounds[:, 0],
-            "miny": bounds[:, 1],
-            "maxx": bounds[:, 2],
-            "maxy": bounds[:, 3],
-        }
-    )
-
-
 def _post_blocks_batches(batches):
     """Flat per-block post-processing (r6): raw face WKB → rep point,
-    geohash, canonical normalize, bounds. Same functions, same values as
-    the former in-kernel _geohash_blocks tail — only the stage boundary
-    moved (dumps→loads of float64 WKB is exact)."""
+    geohash, canonical normalize, bounds. Same values as the former
+    in-kernel per-block tail — only the stage boundary moved (dumps→loads
+    of float64 WKB is exact)."""
     for pdf in batches:
         if len(pdf) == 0:
             continue
@@ -394,10 +367,11 @@ def _batched_normalize_rings(V: np.ndarray, starts: np.ndarray, lens: np.ndarray
 
 def _geohash_blocks_fast(blocks: list, areas: list, regions: list,
                          precision: int = 12) -> pd.DataFrame:
-    """Batched equivalent of _geohash_blocks(..., regions=...) — identical
-    values, vectorized over every simple single-ring Polygon; everything
-    else (holes, multi parts, degenerate cases) routes through the original
-    per-block functions."""
+    """Per-block rep point, geohash, canonical normalize and bounds —
+    vectorized over every simple single-ring Polygon; everything else
+    (holes, multi parts, degenerate cases) routes through the per-block
+    functions. Bit-identical to the per-block reference in
+    tests/test_pipeline.py (``test_post_blocks_batched_bit_identical``)."""
     n = len(blocks)
     if n == 0:
         return pd.DataFrame(columns=BLOCKS_PRE_SCHEMA.fieldNames())

@@ -6,7 +6,10 @@ geometries are exploded onto equal-area quadtree cells; the spatial
 theta-join becomes a cell equi-join followed by an exact vectorized refine
 kernel (J1/J2/J7/J8).
 
-Round-2 layout (reworked from the r1 plan per VERDICT/ADVICE):
+Doc→block assignment has one plan (:func:`assign_docs_to_blocks`): the cell
+equi-join, optionally salted, then the cogrouped Arrow refine. The bucketed
+steady-state path (:func:`assign_docs_steady`) feeds prebuilt inputs to that
+same plan. Its layout:
 
 * the block-cell index is **narrow** — (cell, cell_res, region_code,
   block_id), no WKB. Geometry reaches the refine stage separately, covered at
@@ -60,77 +63,15 @@ def _ensure_bbox(blocks: DataFrame) -> DataFrame:
     ).drop("_bb")
 
 
-def build_block_cell_index(blocks: DataFrame, res: int = INDEX_RES,
-                           interior: bool = False) -> DataFrame:
+def build_block_cell_index(blocks: DataFrame, res: int = INDEX_RES) -> DataFrame:
     """blocks → one NARROW row per (covering cell, block): (cell, cell_res,
-    region_code, block_id[, interior]).
+    region_code, block_id).
 
-    Default: pure JVM (bbox cover via sequence-explode; adaptive per-row
-    resolution for oversized bboxes). ``interior=True`` additionally marks
-    cells whose tile lies entirely inside the block polygon (exact
-    Sutherland–Hodgman test, one Arrow-batched pass over blocks) — docs
-    landing in an interior cell skip the PIP refine kernel entirely, which
-    cuts the Python-side candidate traffic by the interior fraction. The
-    extra cost is blocks-side and amortized over every doc batch — the right
-    trade when docs ≫ blocks AND blocks span many cells (measured: at the
-    bench's street density blocks span only ~2×4 res-14 cells → interior
-    fraction 1%, so the default pipeline keeps the plain JVM index; enable
-    for coarse-block/fine-res geometries where the fraction is large)."""
-    if not interior:
-        covered = cellexpr.with_cover_cells(_ensure_bbox(blocks), res)
-        return covered.select("cell", "cell_res", "region_code", "block_id")
-
-    schema = T.StructType(
-        [
-            T.StructField("cell", T.LongType()),
-            T.StructField("cell_res", T.IntegerType()),
-            T.StructField("region_code", T.StringType()),
-            T.StructField("block_id", T.StringType()),
-            T.StructField("interior", T.BooleanType()),
-        ]
-    )
-
-    def gen(batches):
-        from ..kernels import wkb as _wkb
-        from ..kernels.clip import geom_rect_clip_area
-
-        for pdf in batches:
-            out = {k: [] for k in schema.fieldNames()}
-            for region, bid, buf in zip(
-                pdf["region_code"], pdf["block_id"], pdf["geometry"]
-            ):
-                g = _wkb.loads(bytes(buf))
-                minx, miny, maxx, maxy = _wkb.bounds(g)
-                # same per-block adaptive res rule as the JVM cover — incl.
-                # the wrapped width for antimeridian-crossing bboxes (maxx <
-                # minx ⇒ width = 1 - (fx0 - fx1)), mirroring with_cover_cells
-                fx0 = float(_cells.lon_fraction(np.asarray(minx)))
-                fx1 = float(_cells.lon_fraction(np.asarray(maxx)))
-                wx = max(fx1 - fx0 if fx1 >= fx0 else 1.0 - (fx0 - fx1), 1e-15)
-                wy = max(_cells.lat_fraction(np.asarray(maxy))
-                         - _cells.lat_fraction(np.asarray(miny)), 1e-15)
-                res_eff = int(min(res, np.floor(np.log2(48.0 / wx)),
-                                  np.floor(np.log2(48.0 / wy))))
-                res_eff = max(res_eff, 0)
-                cover = _cells.cover_bbox(minx, miny, maxx, maxy, res_eff, cap=262144)
-                bounds = _cells.cells_bounds(cover)
-                for cell, rect in zip(cover, bounds):
-                    # interiority is tested on an epsilon-expanded rect so a
-                    # block boundary coinciding exactly with a cell edge
-                    # fails the test (that cell takes the refine path; a doc
-                    # ON such a boundary must get the min-block tie-break)
-                    e = 1e-9
-                    rect_e = (rect[0] - e, rect[1] - e, rect[2] + e, rect[3] + e)
-                    area_e = (rect_e[2] - rect_e[0]) * (rect_e[3] - rect_e[1])
-                    w = geom_rect_clip_area(g, rect_e)
-                    out["cell"].append(int(cell))
-                    out["cell_res"].append(res_eff)
-                    out["region_code"].append(region)
-                    out["block_id"].append(bid)
-                    out["interior"].append(bool(w >= area_e * (1.0 - 1e-12)))
-            yield pd.DataFrame(out)
-
-    return blocks.select("region_code", "block_id", "geometry").mapInPandas(gen, schema)
+    Pure JVM: bbox cover via sequence-explode, with an adaptive per-row
+    resolution for oversized bboxes. A pure function of the blocks snapshot,
+    so build it once per snapshot and amortize across doc batches."""
+    covered = cellexpr.with_cover_cells(_ensure_bbox(blocks), res)
+    return covered.select("cell", "cell_res", "region_code", "block_id")
 
 
 def build_refine_geometry(blocks: DataFrame, parent_res: int = PARENT_RES) -> DataFrame:
@@ -258,7 +199,6 @@ def assign_docs_to_blocks(
     blocks: DataFrame | None,
     block_cells: DataFrame | None = None,
     salt_k: int = 0,
-    broadcast_index: bool = False,
     res: int = INDEX_RES,
     geom_cells: DataFrame | None = None,
 ) -> DataFrame:
@@ -268,10 +208,7 @@ def assign_docs_to_blocks(
     requested) → cogrouped exact-PIP refine per PARENT_RES cell, where each
     block's geometry crosses the shuffle once per refine group (not once per
     candidate row) and the min-block_id boundary tie-break happens in-kernel.
-
-    Default is a shuffle join on cell; ``broadcast_index=True`` broadcasts the
-    narrow index (keys only — viable for modest block counts, unlike the r1
-    WKB-carrying index that measured 3.8× slower broadcast).
+    Whether the narrow index side is broadcast is left to AQE.
 
     ``blocks`` may be None when BOTH ``block_cells`` and ``geom_cells`` are
     supplied (the steady-state path: both sides pre-built, e.g. from bucketed
@@ -288,77 +225,7 @@ def assign_docs_to_blocks(
     if block_cells is None:
         block_cells = build_block_cell_index(blocks, res)
     d = doc_cells(docs.select("doc_id", "lon", "lat"), block_cells)
-    has_interior = "interior" in block_cells.columns
-    if has_interior:
-        bc_narrow = block_cells.select("cell", "block_id", "interior")
-    else:
-        bc_narrow = block_cells.select("cell", "block_id")
-    # -- co-partitioned single-shuffle plan (round 4) ----------------------
-    # pcell = parent(cell) is a pure function of the join key, so hashing
-    # BOTH join sides by pcell and joining on (pcell, cell) satisfies the
-    # join's ClusteredDistribution with hash(pcell) — and the refine
-    # cogroup's groupBy(pcell) then needs NO further exchange: the doc side
-    # crosses the wire exactly once (profiled r4: the old plan's
-    # join-then-regroup wrote+read ~200 MB of candidate rows per 2.5M docs
-    # in a second doc-side shuffle). Applies when every index cell is at or
-    # below pcell granularity (res ≥ PARENT_RES — true except for
-    # adaptive-coarsened giant blocks) and the unsalted/non-interior path
-    # is active; otherwise the original two-shuffle plan runs unchanged.
-    # Results are identical: cell equality implies pcell equality.
-    # Plan choice, measured (r4): the co-partitioned plan eliminates the
-    # 2nd doc-side exchange (~40 MB/M docs write+read), but on THIS
-    # single-node host shuffle runs at memory speed and the plan measured
-    # 25-30% slower end-to-end at 32 cores (interleaved A/B, 5M docs:
-    # legacy 24.9-29.6 s vs copart 33.8-35.6 s — the pcell-hashed doc
-    # exchange burns ~80% more CPU than the high-cardinality cell hash).
-    # On a network-shuffle cluster the traffic saving is the win, so the
-    # plan stays selectable: GEOPULL_ASSIGN_PLAN=copart.
-    import os as _os
-
-    _plan = _os.environ.get("GEOPULL_ASSIGN_PLAN", "legacy")
-    use_copart = (
-        _plan == "copart"
-        and salt_k <= 1 and not has_interior and not broadcast_index
-    )
-    if use_copart:
-        # the one driver probe left, paid only by this opt-in plan: it needs
-        # every index cell at or below pcell granularity
-        lo = block_cells.agg(F.min("cell_res")).first()[0]
-        use_copart = lo is not None and lo >= PARENT_RES
-    if use_copart:
-        spark = docs.sparkSession
-        npart = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        bc2 = block_cells.select("cell", "cell_res", "block_id").withColumn(
-            "pcell",
-            F.expr(
-                f"shiftleft(CAST({PARENT_RES} AS BIGINT), 58) | "
-                f"shiftrightunsigned(cell & {(1 << 58) - 1}, "
-                f"2 * (cell_res - {PARENT_RES}))"
-            ),
-        ).drop("cell_res")
-        # SHUFFLE_HASH on the narrow index side: the default SortMergeJoin
-        # would sort the full doc side by (pcell, cell) — measured 1.7×
-        # slower end-to-end at 2 cores. The hash join streams docs through a
-        # per-partition map of index rows (≤ a few hundred k rows/partition)
-        # with no sort; the cogroup's own sort on pcell is unchanged either
-        # way.
-        cand = (
-            d.repartition(npart, "pcell")
-            .join(bc2.repartition(npart, "pcell").hint("SHUFFLE_HASH"),
-                  ["pcell", "cell"], "inner")
-            .select("pcell", "doc_id", "lon", "lat", "block_id")
-        )
-        geom = geom_cells if geom_cells is not None else build_refine_geometry(blocks)
-        # pin the geometry side to the SAME partition count: AQE otherwise
-        # byte-coalesces the small geometry exchange (e.g. 128 → 38), the
-        # cogroup then requires equal child partitioning, and the whole
-        # candidate stream gets RE-exchanged to match — exactly the shuffle
-        # this plan exists to avoid (observed in the r4 profile).
-        return (
-            cand.groupBy("pcell")
-            .cogroup(geom.repartition(npart, "g_pcell").groupBy("g_pcell"))
-            .applyInArrow(_pip_refine_cogroup, _REFINE_SCHEMA)
-        )
+    bc_narrow = block_cells.select("cell", "block_id")
     # geometry side keyed by FIXED-res parent cover of the block bbox (must
     # match the probe-side pcell resolution exactly); prebuild + persist via
     # build_refine_geometry to amortize across doc batches
@@ -375,203 +242,17 @@ def assign_docs_to_blocks(
         d = d.withColumn(
             "salt", F.pmod(F.xxhash64("doc_id"), F.lit(salt_k)).cast("int")
         )
-        join_keys = ["cell", "salt"]
+        salt, g_salt = ["salt"], ["g_salt"]
     else:
-        join_keys = ["cell"]
-    right = F.broadcast(bc_narrow) if broadcast_index else bc_narrow
-    cand = d.join(right, join_keys, "inner")
-    direct = None
-    if has_interior:
-        # interior fast path: the doc's cell tile lies entirely inside this
-        # block, so containment is certain without a PIP test — and blocks
-        # are disjoint, so no other block can contain the doc (any other
-        # candidate at this cell is bbox-only and gets PIP-rejected in the
-        # refine). These rows never reach the Python kernel.
-        direct = cand.filter(F.col("interior")).select("doc_id", "lon", "lat", "block_id")
-        cand = cand.filter(~F.col("interior"))
-    if salt_k > 1:
-        cand = cand.select("pcell", "salt", "doc_id", "lon", "lat", "block_id")
-        refined = (
-            cand.groupBy("pcell", "salt")
-            .cogroup(geom.groupBy("g_pcell", "g_salt"))
-            .applyInArrow(_pip_refine_cogroup, _REFINE_SCHEMA)
-        )
-    else:
-        cand = cand.select("pcell", "doc_id", "lon", "lat", "block_id")
-        refined = (
-            cand.groupBy("pcell")
-            .cogroup(geom.groupBy("g_pcell"))
-            .applyInArrow(_pip_refine_cogroup, _REFINE_SCHEMA)
-        )
-    return refined.unionByName(direct) if direct is not None else refined
-
-
-def _pip_filter_batches(batches, geom_wkb: dict):
-    """Map-side exact-PIP refine for the broadcast plan: candidate batches
-    arrive ordered per partition with each doc's candidate rows ADJACENT
-    (map-side join preserves probe-row order), so the min-block boundary
-    tie-break is a local scan — no shuffle anywhere. Rows of the last doc in
-    a batch are carried into the next batch so a batch boundary can never
-    split a doc's candidates into two emissions."""
-    import pyarrow as pa
-
-    from ..kernels import wkb as _wkbk
-    from ..kernels.pointops import build_edge_soup, points_in_geoms
-
-    geoms: dict = {}  # decoded lazily, cached per worker
-
-    def _geom(bid):
-        g = geoms.get(bid)
-        if g is None:
-            buf = geom_wkb.get(bid)
-            if buf is None:
-                return None
-            g = geoms[bid] = _wkbk.loads(buf)
-        return g
-
-    carry: pa.Table | None = None
-    last_finalized = [None]  # final doc_id of the previous head (order guard)
-
-    def _refine(tbl: pa.Table, emit_tail: bool) -> tuple[pa.Table | None, pa.Table | None]:
-        """→ (emitted rows, carried tail rows)."""
-        n = tbl.num_rows
-        if n == 0:
-            return None, None
-        tail_start = 0 if not emit_tail else n
-        if not emit_tail:
-            # hold back the final doc's rows (may continue in the next batch)
-            doc_arr = tbl.column("doc_id")
-            last = doc_arr[n - 1]
-            tail_start = n - 1
-            while tail_start > 0 and doc_arr[tail_start - 1] == last:
-                tail_start -= 1
-            if tail_start == 0:  # whole batch is one doc — carry it all
-                return None, tbl
-        head = tbl.slice(0, tail_start)
-        tail = tbl.slice(tail_start) if tail_start < n else None
-        if head.num_rows == 0:
-            return None, tail
-        head = head.combine_chunks()
-        px = head.column("lon").to_numpy(zero_copy_only=False)
-        py = head.column("lat").to_numpy(zero_copy_only=False)
-        # group candidate rows by block via dictionary encode (vectorized PIP)
-        import pyarrow.compute as pc
-
-        def _enc1(arr):
-            e = pc.dictionary_encode(arr)
-            if isinstance(e, pa.ChunkedArray):
-                e = e.combine_chunks()
-                if isinstance(e, pa.ChunkedArray):
-                    e = e.chunk(0)
-            return e
-
-        # --- order guard (ADVICE r3): correctness of the carry + tie-break
-        # logic depends on the map-side join keeping each doc's candidate
-        # rows ADJACENT within the partition. That holds for the exact plan
-        # built here (BroadcastHashJoin preserves probe order), but a plan
-        # shape change (AQE replan, SMJ fallback, caller pre-shuffle) would
-        # silently dedupe wrong — fail loudly instead.
-        d_enc = _enc1(head.column("doc_id"))
-        d_idx = d_enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-        n_runs = 1 + int(np.count_nonzero(d_idx[1:] != d_idx[:-1]))
-        if n_runs != len(d_enc.dictionary):
-            raise RuntimeError(
-                "assign_docs_broadcast: candidate rows for one doc arrived "
-                "non-adjacent — the plan no longer preserves probe-row order; "
-                "use assign_docs_to_blocks (cogroup plan) instead"
-            )
-        first_doc = head.column("doc_id")[0].as_py()
-        if last_finalized[0] is not None and first_doc == last_finalized[0]:
-            raise RuntimeError(
-                "assign_docs_broadcast: batch begins with an already-finalized "
-                "doc_id — probe-row order was broken across batches; use "
-                "assign_docs_to_blocks (cogroup plan) instead"
-            )
-        last_finalized[0] = head.column("doc_id")[head.num_rows - 1].as_py()
-        enc = _enc1(head.column("block_id"))
-        bid_dict = enc.dictionary.to_pylist()
-        idx = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-        # same batched edge-soup PIP as the cogroup kernel (r4)
-        soup = build_edge_soup([_geom(bid) for bid in bid_dict])
-        keep = points_in_geoms(px, py, idx, soup)
-        kept = np.flatnonzero(keep)
-        if len(kept) == 0:
-            return None, tail
-        # per-doc min-block tie-break (vectorized, same recipe as the
-        # cogrouped kernel): rank blocks by string order, lexsort per doc
-        kd = d_idx[kept]
-        if len(np.unique(kd)) != len(kd):
-            block_rank_of = np.empty(len(bid_dict), dtype=np.int64)
-            block_rank_of[np.argsort(np.asarray(bid_dict, dtype=object))] = np.arange(
-                len(bid_dict)
-            )
-            row_rank = block_rank_of[idx[kept]]
-            o = np.lexsort((row_rank, kd))
-            first = np.ones(len(o), dtype=bool)
-            first[1:] = kd[o][1:] != kd[o][:-1]
-            kept = np.sort(kept[o[first]])
-        out = head.take(pa.array(kept))
-        return out.select(["doc_id", "lon", "lat", "block_id"]), tail
-
-    for tbl in batches:
-        if carry is not None:
-            tbl = pa.concat_tables([carry, tbl]).combine_chunks()
-            carry = None
-        emitted, carry = _refine(tbl, emit_tail=False)
-        if emitted is not None and emitted.num_rows:
-            yield emitted
-    if carry is not None:
-        emitted, _ = _refine(carry, emit_tail=True)
-        if emitted is not None and emitted.num_rows:
-            yield emitted
-
-
-def assign_docs_broadcast(
-    docs: DataFrame,
-    blocks: DataFrame,
-    block_cells: DataFrame | None = None,
-    res: int = INDEX_RES,
-) -> DataFrame:
-    """J7 doc→block assignment as a MAP-ONLY plan: broadcast the narrow cell
-    index (equi-join happens map-side) and the block geometry dictionary
-    (PIP refine happens in the same pass) — zero shuffles on the doc side.
-
-    When it wins (measured): SMALL block counts (≲ a few thousand blocks —
-    city/metro snapshots), where each Arrow batch holds many candidates per
-    block and the vectorized PIP amortizes. At large block counts with
-    randomly-ordered docs it LOSES to :func:`assign_docs_to_blocks`: a 10k-row
-    batch then touches ~10k distinct blocks (~1 row per group), so the
-    per-group kernel overhead dominates (measured 4× slower at 140k blocks /
-    10M docs), while the cogrouped plan's pcell shuffle buys spatial
-    coherence. Default pipeline keeps the cogroup plan; results are
-    bit-identical between the two (tested), including the min-block boundary
-    tie-break.
-    """
-    blocks = _ensure_bbox(blocks)
-    if block_cells is None:
-        block_cells = build_block_cell_index(blocks, res)
-    d = doc_cells(docs.select("doc_id", "lon", "lat"), block_cells)
-    cand = d.join(
-        F.broadcast(block_cells.select("cell", "block_id")), "cell", "inner"
-    ).select("doc_id", "lon", "lat", "block_id")
-    # geometry dictionary: one driver round-trip per blocks snapshot
-    geom_wkb = {
-        r["block_id"]: bytes(r["geometry"])
-        for r in blocks.select("block_id", "geometry").collect()
-    }
-    bvar = docs.sparkSession.sparkContext.broadcast(geom_wkb)
-
-    def gen(batches):
-        import pyarrow as pa
-
-        def tables():
-            for b in batches:
-                yield pa.Table.from_batches([b])
-
-        for out in _pip_filter_batches(tables(), bvar.value):
-            yield from out.to_batches()
-
-    return cand.mapInArrow(gen, _REFINE_SCHEMA)
+        salt, g_salt = [], []
+    cand = d.join(bc_narrow, ["cell", *salt], "inner").select(
+        "pcell", *salt, "doc_id", "lon", "lat", "block_id"
+    )
+    return (
+        cand.groupBy("pcell", *salt)
+        .cogroup(geom.groupBy("g_pcell", *g_salt))
+        .applyInArrow(_pip_refine_cogroup, _REFINE_SCHEMA)
+    )
 
 
 def assign_docs_full(

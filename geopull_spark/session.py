@@ -28,22 +28,23 @@ def get_spark(
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
+        # AQE, its partition coalescing and skew-join splitting, and Arrow's
+        # 10000 rows per batch are pyspark 4.1 defaults and are not restated
+        # here (tests/test_pipeline.py pins each of them).
         # AQE coalescing targets max(minPartitionSize, bytes/parallelism);
         # with the default 1MB floor our geometry group-kernels (tiny bytes,
         # huge CPU) collapse onto ~1 task (measured 10.5× slowdown on the
         # blocker stage). minPartitionSize=1b keeps the coalesce target at
         # bytes/parallelism → every shuffle lands near defaultParallelism.
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1b")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # co-partitioned assignment plan (spatial_join.py): both join sides
-        # hash by pcell (a prefix function of the cell join key) so the
-        # refine cogroup reuses the join partitioning. The default
-        # requireAllClusterKeysForCoPartition=true rejects subset-key
-        # partitionings and re-exchanges the whole candidate stream;
-        # relaxing it is exactly the supported use of this knob (equal full
-        # keys always co-locate under a hash of any common subset).
+        # The ann_lsh driver query semi-joins two per-query top-k frames on
+        # (q_id, vec_id); both sides are already hash-partitioned by q_id
+        # from their top-k windows. With the default
+        # requireAllClusterKeysForCoPartition=true the planner rejects that
+        # subset-key partitioning and re-shuffles both sides: the plan goes
+        # from 7 to 9 Exchanges. No other driver query's plan changes with
+        # this setting. Equal full keys always co-locate under a hash of any
+        # common subset, so results are equal.
         .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
         # Shuffle writer: the bypass-merge writer opens one temp file +
         # 32 KB buffer PER REDUCE PARTITION per map task; at R reduce
@@ -51,16 +52,11 @@ def get_spark(
         # create/write/close/merge ops — measured 85 cpu-s (0.67 s/task)
         # to shuffle 4 MB at M=R=128 vs 7.9 cpu-s with the sort-based
         # writer, which writes ONE spill file per map task regardless of
-        # R (r6, /tmp/taskfloor repro). Large shuffles already take the
-        # sort path (bypass only applies at R ≤ 200), so forcing it is
-        # scale-neutral; env-overridable to restore the default.
-        .config(
-            "spark.shuffle.sort.bypassMergeThreshold",
-            os.environ.get("GEOPULL_BYPASS_MERGE_THRESHOLD", "2"),
-        )
+        # R. Large shuffles already take the sort path (bypass only
+        # applies at R ≤ 200), so forcing it is scale-neutral.
+        .config("spark.shuffle.sort.bypassMergeThreshold", "2")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
     )

@@ -3,11 +3,9 @@ plan variant forks the frozen outputs.
 
 Runs at sf0.001 (fast, CI-style):
   1. full pipeline → blocks (broadcast + cells line routing)
-  2. doc→block assignment via SIX variants: cogroup plan, cogroup+salt_k=4,
-     map-only broadcast plan, the co-partitioned single-shuffle plan
-     (GEOPULL_ASSIGN_PLAN=copart), the bucketed steady-state plan
-     (prepare_bucketed_assignment + assign_docs_steady), and the streaming
-     AvailableNow path (VERDICT r4 #7 added copart + steady)
+  2. doc→block assignment via FOUR variants: cogroup plan, cogroup+salt_k=4,
+     the bucketed steady-state plan (prepare_bucketed_assignment +
+     assign_docs_steady), and the streaming AvailableNow path
   3. compares md5 fingerprints of the sorted output rows against the frozen
      hashes below (and each variant against the others)
 
@@ -85,13 +83,6 @@ def main() -> int:
     docs = synth.interleaved_documents(spark, SF).select("doc_id", "lon", "lat").cache()
     bc = spatial_join.build_block_cell_index(blocks_ref).cache()
     assign_hashes = {}
-    def _copart():
-        os.environ["GEOPULL_ASSIGN_PLAN"] = "copart"
-        try:  # plan is chosen at DataFrame-construction time
-            return spatial_join.assign_docs_to_blocks(docs, blocks_ref, bc)
-        finally:
-            del os.environ["GEOPULL_ASSIGN_PLAN"]
-
     def _steady():
         spatial_join.prepare_bucketed_assignment(blocks_ref, prefix="det_gate_assign")
         return spatial_join.assign_docs_steady(docs, prefix="det_gate_assign")
@@ -100,9 +91,6 @@ def main() -> int:
         "cogroup": lambda: spatial_join.assign_docs_to_blocks(docs, blocks_ref, bc),
         "cogroup_salt4": lambda: spatial_join.assign_docs_to_blocks(
             docs, blocks_ref, bc, salt_k=4),
-        "broadcast_plan": lambda: spatial_join.assign_docs_broadcast(
-            docs, blocks_ref, bc),
-        "copart": _copart,
         "steady_bucketed": _steady,
     }
     for name, fn in variants.items():

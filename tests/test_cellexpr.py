@@ -1,6 +1,6 @@
 """JVM (Catalyst) ↔ numpy parity for the cell grid — load-bearing: the doc
 side of every spatial join derives keys via functions/cellexpr.py while
-kernels (kNN, zonal, interior index) use kernels/cells.py; a single
+kernels (kNN, zonal) use kernels/cells.py; a single
 disagreeing bit would silently drop candidates at cell boundaries."""
 
 import numpy as np

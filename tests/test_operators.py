@@ -256,26 +256,6 @@ def test_knn_points_exact_vs_brute(spark):
             assert got[(pid, rk)] == qid, (pid, rk)
 
 
-def test_broadcast_assignment_matches_shuffle(spark):
-    """Map-only broadcast plan == cogrouped shuffle plan, bit-identical
-    (incl. boundary min-block tie-break and multi-res probes)."""
-    from geopull_spark.operators import blocker, extract, normalize
-
-    ways = synth.gen_osm_ways(spark, streets_per_region=60)
-    land = normalize.normalize_land(
-        extract.extract_admin(ways), extract.extract_water(ways), synth.gen_coastline(spark)
-    )
-    blocks = blocker.build_blocks(land, extract.extract_linestrings(ways)).cache()
-    docs = synth.interleaved_documents(spark, "/root/testdata/sf0.001").select(
-        "doc_id", "lon", "lat"
-    )
-    a = {(r["doc_id"], r["block_id"])
-         for r in spatial_join.assign_docs_to_blocks(docs, blocks).collect()}
-    b = {(r["doc_id"], r["block_id"])
-         for r in spatial_join.assign_docs_broadcast(docs, blocks).collect()}
-    assert a == b and len(a) > 0
-
-
 def test_knn_releases_ring_caches(spark):
     """ADVICE r2: the adaptive-ring loop persists per-ring frames for its
     intra-loop count/anti-join; none may stay cached after knn_points returns
@@ -370,16 +350,12 @@ def test_assignment_handles_streetless_giant_block(spark):
 
 def test_assignment_against_empty_index_is_empty(spark):
     """An index with no cells (e.g. a snapshot with no blocks) gives no
-    rows, with the assignment schema, from every plan that probes it."""
+    rows, with the assignment schema, salted or not."""
     docs = synth.interleaved_documents(spark, SF).select("doc_id", "lon", "lat")
     bc = spark.createDataFrame([], "cell long, cell_res int, region_code string, block_id string")
     gc = spark.createDataFrame([], "g_pcell long, g_block_id string, g_geometry binary")
-    blocks = spark.createDataFrame(
-        [], "region_code string, block_id string, geometry binary, "
-        "minx double, miny double, maxx double, maxy double")
     for out in (spatial_join.assign_docs_to_blocks(docs, None, bc, geom_cells=gc),
-                spatial_join.assign_docs_to_blocks(docs, None, bc, salt_k=4, geom_cells=gc),
-                spatial_join.assign_docs_broadcast(docs, blocks, bc)):
+                spatial_join.assign_docs_to_blocks(docs, None, bc, salt_k=4, geom_cells=gc)):
         assert out.columns == ["doc_id", "lon", "lat", "block_id"]
         assert out.count() == 0
 
@@ -498,35 +474,6 @@ def test_embedding_neardup_lsh_default_and_planted_dups(spark):
     # and the default plan contains no cartesian product
     plan = similarity.embedding_neardup_pairs(both, threshold=0.25)._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
-
-
-def test_interior_index_assignment_matches_plain(spark):
-    """Interior-cell fast path must not change the assignment — only which
-    rows bypass the PIP kernel."""
-    from geopull_spark.operators import blocker, extract, normalize
-
-    ways = synth.gen_osm_ways(spark, streets_per_region=25)
-    land = normalize.normalize_land(
-        extract.extract_admin(ways), extract.extract_water(ways), synth.gen_coastline(spark)
-    )
-    blocks = blocker.build_blocks(land, extract.extract_linestrings(ways)).cache()
-    docs = synth.interleaved_documents(spark, SF).select("doc_id", "lon", "lat")
-    bc_plain = spatial_join.build_block_cell_index(blocks)
-    bc_int = spatial_join.build_block_cell_index(blocks, interior=True).cache()
-    # the flag marks a meaningful fraction and the cells match the JVM cover
-    n_int = bc_int.filter(F.col("interior")).count()
-    assert n_int > 0
-    plain_cells = {(r["cell"], r["block_id"]) for r in bc_plain.collect()}
-    int_cells = {(r["cell"], r["block_id"]) for r in bc_int.collect()}
-    assert plain_cells == int_cells
-    a = sorted((r["doc_id"], r["block_id"]) for r in
-               spatial_join.assign_docs_to_blocks(docs, blocks, bc_plain).collect())
-    b = sorted((r["doc_id"], r["block_id"]) for r in
-               spatial_join.assign_docs_to_blocks(docs, blocks, bc_int).collect())
-    assert a == b
-    c = sorted((r["doc_id"], r["block_id"]) for r in
-               spatial_join.assign_docs_to_blocks(docs, blocks, bc_int, salt_k=4).collect())
-    assert a == c
 
 
 def test_connected_components_chain_and_singleton(spark):

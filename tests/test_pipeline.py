@@ -459,25 +459,6 @@ def test_assign_docs_steady_bucketed_identical(spark, world):
         spark.sql("DROP TABLE IF EXISTS t_steady_refine_geom")
 
 
-def test_copart_assignment_plan_identical(spark, world):
-    """The co-partitioned single-shuffle plan (GEOPULL_ASSIGN_PLAN=copart)
-    returns exactly the rows of the default plan."""
-    import os as _os
-
-    docs = synth.interleaved_documents(spark, SF).select("doc_id", "lon", "lat")
-    bc = spatial_join.build_block_cell_index(world["blocks"])
-    legacy = sorted(map(tuple, spatial_join.assign_docs_to_blocks(
-        docs, world["blocks"], bc).select("doc_id", "block_id").collect()))
-    _os.environ["GEOPULL_ASSIGN_PLAN"] = "copart"
-    try:
-        spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-        copart = sorted(map(tuple, spatial_join.assign_docs_to_blocks(
-            docs, world["blocks"], bc).select("doc_id", "block_id").collect()))
-    finally:
-        _os.environ.pop("GEOPULL_ASSIGN_PLAN", None)
-    assert legacy == copart and len(legacy) > 0
-
-
 def test_manifest_file_pruning_read_range(spark, tmp_path):
     """Iceberg-style data skipping: per-file min/max from parquet footers
     recorded at commit; a range-clustered table answers a needle range from
@@ -648,6 +629,53 @@ def test_get_spark_defaults_worker_python_to_driver(spark, monkeypatch):
     assert os.path.basename(os.environ["PYSPARK_PYTHON"]) == "pyworker.sh"
 
 
+def test_get_spark_session_settings(spark):
+    """The settings the engine relies on, whether ``get_spark`` sets them or
+    they are pyspark defaults it no longer restates: a default that drifts
+    under a future pyspark fails here."""
+    conf = spark.conf
+    assert conf.get("spark.sql.adaptive.enabled") == "true"
+    assert conf.get("spark.sql.adaptive.coalescePartitions.enabled") == "true"
+    assert conf.get("spark.sql.adaptive.skewJoin.enabled") == "true"
+    assert conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize") == "1b"
+    assert conf.get("spark.sql.execution.arrow.pyspark.enabled") == "true"
+    assert conf.get("spark.sql.execution.arrow.maxRecordsPerBatch") == "10000"
+    assert conf.get("spark.sql.requireAllClusterKeysForCoPartition") == "false"
+    sc_conf = spark.sparkContext.getConf()
+    assert sc_conf.get("spark.shuffle.sort.bypassMergeThreshold") == "2"
+
+
+def _geohash_blocks(blocks: list, areas: list, regions: list,
+                    precision: int = 12):
+    """Per-block reference for ``blocker._geohash_blocks_fast``: one
+    representative point, normalize, WKB and bounds call per block."""
+    import pandas as pd
+
+    from geopull_spark.kernels.cells import geohash_encode
+    from geopull_spark.kernels.overlay import normalize_geom
+    from geopull_spark.kernels.pointops import representative_point
+
+    reps = np.array([representative_point(b[1]) for b in blocks])
+    ghs = geohash_encode(reps[:, 1], reps[:, 0], precision)
+    norm = [normalize_geom(b) for b in blocks]
+    wkbs = [kwkb.dumps(g) for g in norm]
+    bounds = np.array([kwkb.bounds(g) for g in norm])
+    return pd.DataFrame(
+        {
+            "region_code": regions,
+            "geohash": ghs,
+            "geometry": wkbs,
+            "area_m2": areas,
+            "rep_lon": reps[:, 0],
+            "rep_lat": reps[:, 1],
+            "minx": bounds[:, 0],
+            "miny": bounds[:, 1],
+            "maxx": bounds[:, 2],
+            "maxy": bounds[:, 3],
+        }
+    )
+
+
 def test_post_blocks_batched_bit_identical(world):
     """r6 batched post-processing (_geohash_blocks_fast) must be
     bit-identical to the per-block reference (_geohash_blocks) on real
@@ -655,9 +683,7 @@ def test_post_blocks_batched_bit_identical(world):
     inputs: holed polygons, collinear-vertex rings, duplicate consecutive
     vertices, a near-zero-area sliver (sign-guard fallback), and a
     vertex-level scanline (nudge path)."""
-    from geopull_spark.operators.blocker import (
-        _geohash_blocks, _geohash_blocks_fast,
-    )
+    from geopull_spark.operators.blocker import _geohash_blocks_fast
 
     # real pipeline raw faces: re-derive from the world's blocks by
     # decoding their WKB (normalize is idempotent and rep/bounds depend
@@ -693,7 +719,7 @@ def test_post_blocks_batched_bit_identical(world):
     areas += [1.0] * len(extra)
     regions += ["ZZZ"] * len(extra)
 
-    ref = _geohash_blocks(geoms, areas, None, regions=regions)
+    ref = _geohash_blocks(geoms, areas, regions)
     fast = _geohash_blocks_fast(geoms, areas, regions)
     assert len(ref) == len(fast) == len(geoms)
     for col in ref.columns:
