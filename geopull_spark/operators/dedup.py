@@ -1,11 +1,12 @@
 """Deduplication operators over the documents table.
 
-Large-scale training-pipeline dedup, all JVM-side Catalyst expressions (no
-Python in the hot path):
+Large-scale training-pipeline dedup. All of it is JVM-side Catalyst
+expressions except the MinHash signature, a pandas UDF evaluated once per
+document:
 
   exact_dedup        — content-hash groupBy (md5), keep min doc_id
-  minhash_lsh_pairs  — char-shingles → per-band min-hash → band-bucket
-                       self-join → candidate pairs (classic MinHash+LSH)
+  minhash_lsh_pairs  — char-shingles → per-band min-hash → band buckets →
+                       candidate pairs (classic MinHash+LSH)
   simhash64          — 64-bit SimHash from token hashes via bit-vote
   simhash_neardup    — banded SimHash join + hamming ≤ k refine
   ngram_jaccard_pairs— exact n-gram Jaccard via shingle-explode equi-join
@@ -35,9 +36,10 @@ def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     )
 
 
-def minhash_signature(docs: DataFrame, text_col: str = "text", n_bands: int = 8,
-                      id_col: str = "doc_id") -> DataFrame:
-    """Per-band MinHash via the linear-time rolling-hash kernel (pandas UDF).
+def _signatures(docs: DataFrame, text_col: str, n_bands: int, id_col: str) -> DataFrame:
+    """(id, bands): the n_bands-long MinHash signature from the rolling-hash
+    kernel (pandas UDF). A null text gets an array of nulls, so such
+    documents share the (band, NULL) buckets.
 
     A native-SQL shingle variant (transform/sequence over ``substr``) would
     be O(n²) in text length because Spark's ``substr`` re-scans the UTF8
@@ -49,16 +51,15 @@ def minhash_signature(docs: DataFrame, text_col: str = "text", n_bands: int = 8,
 
     @pandas_udf(T.ArrayType(T.LongType()))
     def mh(texts: pd.Series) -> pd.Series:
-        out: list = [None] * len(texts)
+        out: list = [[None] * n_bands] * len(texts)
         datas, idx = [], []
         for i, t in enumerate(texts):
             if t is not None:
                 datas.append(t.encode("utf-8"))
                 idx.append(i)
         if datas:
-            sigs = minhash_bands_batch(datas, 8, n_bands)
-            for j, i in enumerate(idx):
-                out[i] = [int(x) for x in sigs[j]]
+            for i, sig in zip(idx, minhash_bands_batch(datas, 8, n_bands).tolist()):
+                out[i] = sig
         return pd.Series(out, dtype=object)
 
     d = docs.select(id_col, text_col)
@@ -66,74 +67,74 @@ def minhash_signature(docs: DataFrame, text_col: str = "text", n_bands: int = 8,
     # parquet input (the small-sf shape) would run the whole signature pass
     # on ONE core. Spread only when the input is narrower than the cluster —
     # at crawl scale the scan already has >= dp partitions and no shuffle of
-    # text payload is added (r6).
+    # text payload is added (r6). ``docs.rdd`` is cached per frame: a repeat
+    # call compiles no plan.
     dp = docs.sparkSession.sparkContext.defaultParallelism
-    if not d.isStreaming and d.rdd.getNumPartitions() < dp:
+    if not docs.isStreaming and docs.rdd.getNumPartitions() < dp:
         d = d.repartition(dp)
-    sig = d.select(id_col, mh(F.col(text_col)).alias("bands"))
-    return sig.select(
-        id_col, *[F.col("bands")[b].alias(f"band{b}") for b in range(n_bands)]
+    return d.select(id_col, mh(F.col(text_col)).alias("bands"))
+
+
+def _band_rows(docs: DataFrame, text_col: str, n_bands: int, id_col: str) -> DataFrame:
+    """One (id, band:int, mh:long) row per document and band. ``bands`` is
+    never empty; ``_outer`` only stops Catalyst from inferring a
+    ``size(bands) > 0`` filter that would push a second UDF copy down."""
+    return _signatures(docs, text_col, n_bands, id_col).selectExpr(
+        f"`{id_col}`", "posexplode_outer(bands) AS (band, mh)"
+    )
+
+
+def minhash_signature(docs: DataFrame, text_col: str = "text", n_bands: int = 8,
+                      id_col: str = "doc_id") -> DataFrame:
+    """Per-band MinHash as columns (id, band0 .. band{n_bands-1})."""
+    return _signatures(docs, text_col, n_bands, id_col).selectExpr(
+        f"`{id_col}`", *[f"bands[{b}] AS band{b}" for b in range(n_bands)]
     )
 
 
 def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text", n_bands: int = 8,
                       id_col: str = "doc_id", bucket_cap: int = 128) -> DataFrame:
-    """Candidate near-dup pairs: docs agreeing on ≥1 min-hash band.
+    """Candidate near-dup pairs (doc_a < doc_b): docs agreeing on ≥1 min-hash
+    band.
 
-    Scale-safe bucket handling (the crawl-data hot-bucket problem): empty /
-    boilerplate / template documents produce *identical* signatures by the
-    million, so one (band, bucket) key can hold 10⁶ members. An unbounded
-    ``collect_list`` would materialize that bucket as a single 10⁶-element
-    array row (executor OOM) and all-pairs explosion would emit 10¹² rows
-    from it. Instead:
+    Crawl data holds boilerplate documents with *identical* signatures by
+    the million, so one (band, mh) bucket can hold 10⁶ members; collecting
+    it would build a 10⁶-element row and all-pairs would emit 10¹² rows.
+    One linear plan, one signature UDF evaluation, one band shuffle:
 
-      1. One shuffle on (band, mh); window ``count``/``min`` annotate every
-         member with its bucket size and representative (min id). WindowExec
-         spills to disk, so a mega-bucket never materializes as one row.
-      2. Buckets with 2 ≤ n ≤ ``bucket_cap``: all-pairs explosion exactly as
-         before — the ``collect_list`` is provably ≤ bucket_cap elements, and
-         the groupBy reuses the window's hash(band, mh) partitioning (no
-         second exchange; see PLANS.md).
-      3. Buckets with n > bucket_cap: emit the *star* spanning pairs
-         (rep, member) — k−1 rows instead of k(k−1)/2, map-only. For
-         connected-components dedup (``dedup_groups``) the star yields the
-         IDENTICAL clusters; only pair-level enumeration inside a mega-bucket
-         (by construction a near-identical cluster) is reduced.
+      1. ``posexplode`` the signature into (id, band, mh) rows.
+      2. One window over (band, mh) gives each member its bucket size ``n``
+         and representative ``rep`` (min id); keep n ≥ 2. WindowExec spills,
+         so a mega-bucket never becomes one row.
+      3. One aggregate keyed by (band, mh, rep, k), k = NULL if n ≤
+         ``bucket_cap`` else the member id, reuses the window's partitioning
+         (no second exchange). Its ``collect_list`` is provably ≤ bucket_cap
+         long; an oversize member is a 1-element group.
+      4. One generator emits all a < b pairs of a small bucket and the *star*
+         edge (rep, member) of an oversize member: k−1 rows instead of
+         k(k−1)/2, with IDENTICAL connected components (``dedup_groups``).
+         A final ``distinct`` drops pairs found on several bands.
 
-    The signature pandas UDF is evaluated once (a band-bucket self-join
-    would re-derive it on both branches and shuffle twice). Per-row and
-    per-task memory are bounded regardless of bucket skew."""
-    from pyspark.sql import Window
-
-    mh = minhash_signature(docs, text_col, n_bands, id_col)
-    stacked = mh.select(
-        F.col(id_col),
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("band"), F.col(f"band{b}").alias("mh"))
-            for b in range(n_bands)
-        ])).alias("s"),
-    ).select(id_col, F.col("s.band").alias("band"), F.col("s.mh").alias("mh"))
-    w = Window.partitionBy("band", "mh")
-    sized = stacked.select(
-        id_col, "band", "mh",
-        F.count("*").over(w).alias("n"),
-        F.min(id_col).over(w).alias("rep"),
+    The former plan split the windowed rows into a small and a star branch;
+    their column pruning differed, so on a cached input Spark did not reuse
+    the band exchange between them and ran the UDF — the Python boundary —
+    twice per document."""
+    i = f"`{id_col}`"
+    return (
+        _band_rows(docs, text_col, n_bands, id_col)
+        .selectExpr(i, "band", "mh",
+                    "count(1) OVER (PARTITION BY band, mh) AS n",
+                    f"min({i}) OVER (PARTITION BY band, mh) AS rep")
+        .where("n >= 2")
+        .selectExpr(i, "band", "mh", "rep", f"IF(n > {int(bucket_cap)}, {i}, NULL) AS k")
+        .groupBy("band", "mh", "rep", "k")
+        .agg(F.expr(f"collect_list({i}) AS ids"))
+        .selectExpr(
+            "inline(flatten(transform(IF(k IS NULL, ids, array(rep)), a ->"
+            " transform(filter(ids, b -> a < b), b -> struct(a AS doc_a, b AS doc_b)))))"
+        )
+        .distinct()
     )
-    small = (
-        sized.filter((F.col("n") >= 2) & (F.col("n") <= bucket_cap))
-        .groupBy("band", "mh")
-        .agg(F.collect_list(F.col(id_col)).alias("ids"))
-    )
-    small_pairs = (
-        small.select(F.explode("ids").alias("doc_a"), "ids")
-        .select("doc_a", F.explode("ids").alias("doc_b"))
-        .filter(F.col("doc_a") < F.col("doc_b"))
-    )
-    star_pairs = (
-        sized.filter((F.col("n") > bucket_cap) & (F.col(id_col) != F.col("rep")))
-        .select(F.col("rep").alias("doc_a"), F.col(id_col).alias("doc_b"))
-    )
-    return small_pairs.unionByName(star_pairs).distinct()
 
 
 def lsh_bucket_stats(docs: DataFrame, text_col: str = "text", n_bands: int = 8,
@@ -141,15 +142,8 @@ def lsh_bucket_stats(docs: DataFrame, text_col: str = "text", n_bands: int = 8,
     """Diagnostic: per-band bucket-size distribution + how many buckets the
     ``bucket_cap`` routed to the star path. Run eagerly before a large dedup
     to pick ``bucket_cap`` / decide whether to pre-strip exact dups."""
-    mh = minhash_signature(docs, text_col, n_bands, id_col)
-    stacked = mh.select(
-        F.col(id_col),
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("band"), F.col(f"band{b}").alias("mh"))
-            for b in range(n_bands)
-        ])).alias("s"),
-    ).select(F.col("s.band").alias("band"), F.col("s.mh").alias("mh"))
-    sizes = stacked.groupBy("band", "mh").agg(F.count("*").alias("n"))
+    sizes = _band_rows(docs, text_col, n_bands, id_col).groupBy("band", "mh").agg(
+        F.count("*").alias("n"))
     return sizes.groupBy("band").agg(
         F.count("*").alias("n_buckets"),
         F.max("n").alias("max_bucket"),

@@ -180,16 +180,9 @@ def minhash_neardup_stream(doc_stream: DataFrame, text_col: str = "text",
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from ..operators.dedup import minhash_signature
+    from ..operators.dedup import _band_rows
 
-    sig = minhash_signature(doc_stream, text_col, n_bands, id_col)
-    stacked = sig.select(
-        F.col(id_col),
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("band"), F.col(f"band{b}").alias("mh"))
-            for b in range(n_bands)
-        ])).alias("s"),
-    ).select(id_col, F.col("s.band").alias("band"), F.col("s.mh").alias("mh"))
+    stacked = _band_rows(doc_stream, text_col, n_bands, id_col)
 
     out_schema = T.StructType([
         T.StructField("doc_a", T.StringType()),

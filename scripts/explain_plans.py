@@ -3,13 +3,15 @@ evidence that matters at scale: parquet PushedFilters / ReadSchema (pushdown
 + pruning), WholeStageCodegen spans, join strategies, exchange counts.
 
 Usage: python scripts/explain_plans.py [sf_dir] [query ...]
-Writes PLANS.md at the repo root.
+Writes PLANS.md at the repo root. With query names, only their ``## <name>``
+sections are replaced (or appended); the rest of PLANS.md is kept.
 """
 
 from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -28,7 +30,8 @@ def main() -> None:
     from geopull_spark.session import get_spark
 
     spark = get_spark(master="local[4]", shuffle_partitions=8)
-    out = ["# PLANS — physical plan evidence (generated by scripts/explain_plans.py)\n"]
+    header = "# PLANS — physical plan evidence (generated by scripts/explain_plans.py)\n"
+    sections: dict[str, list] = {}
     skip = {"blocks_build", "doc_block_assign", "knn_blocks", "zonal_population"}  # pipeline-heavy
     for name, fn in m.queries().items():
         if only and name not in only:
@@ -42,20 +45,29 @@ def main() -> None:
                 df.explain("formatted")
             plan = buf.getvalue()
         except Exception as e:
-            out.append(f"## {name}\nERROR: {e}\n")
+            sections[name] = [f"## {name}\nERROR: {e}\n"]
             continue
         pushed = [ln.strip() for ln in plan.splitlines() if "PushedFilters" in ln or "ReadSchema" in ln]
         codegen = sum(1 for ln in plan.splitlines() if "WholeStageCodegen" in ln and "(" in ln)
         exchanges = sum(1 for ln in plan.splitlines() if ln.strip().startswith("Exchange") or "+- Exchange" in ln)
         joins = [ln.strip().split()[0] for ln in plan.splitlines() if "Join" in ln and ("Broadcast" in ln or "SortMerge" in ln or "ShuffledHash" in ln)]
-        out.append(f"## {name}\n")
+        out = sections[name] = [f"## {name}\n"]
         out.append(f"- exchanges (shuffles): {exchanges}; join ops: {joins or 'none'}")
         for p in pushed[:6]:
             out.append(f"- `{p[:160]}`")
         out.append("\n<details><summary>full plan</summary>\n\n```\n" + plan[:6000] + "\n```\n</details>\n")
-    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
-        f.write("\n".join(out))
-    print(f"wrote PLANS.md ({len(out)} sections)")
+    path = os.path.join(REPO, "PLANS.md")
+    text = {n: "\n".join(out) for n, out in sections.items()}
+    if only and os.path.exists(path):
+        with open(path) as f:
+            old = re.split(r"^(?=## )", f.read(), flags=re.M)
+        header, kept = old[0].rstrip("\n") + "\n", {}
+        for sec in old[1:]:
+            kept[sec.split(None, 2)[1]] = sec.rstrip("\n") + "\n"
+        text = {**kept, **text}
+    with open(path, "w") as f:
+        f.write("\n".join([header] + list(text.values())))
+    print(f"wrote PLANS.md ({len(sections)} of {len(text)} sections refreshed)")
 
 
 if __name__ == "__main__":

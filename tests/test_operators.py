@@ -573,6 +573,134 @@ def test_lsh_small_buckets_exact_all_pairs(spark):
     assert expect <= got  # exact dups are always candidates, as full pairs
 
 
+def _minhash_lsh_pairs_reference(docs, bucket_cap, n_bands=8, id_col="doc_id"):
+    """The former two-branch ``dedup.minhash_lsh_pairs`` plan, kept as the
+    reference: a window sizes each (band, mh) bucket, then a small-bucket
+    all-pairs branch and an oversize star branch are unioned."""
+    from pyspark.sql import Window
+
+    mh = dedup.minhash_signature(docs, "text", n_bands, id_col)
+    stacked = mh.select(
+        F.col(id_col),
+        F.explode(F.array(*[
+            F.struct(F.lit(b).alias("band"), F.col(f"band{b}").alias("mh"))
+            for b in range(n_bands)
+        ])).alias("s"),
+    ).select(id_col, F.col("s.band").alias("band"), F.col("s.mh").alias("mh"))
+    w = Window.partitionBy("band", "mh")
+    sized = stacked.select(
+        id_col, "band", "mh",
+        F.count("*").over(w).alias("n"),
+        F.min(id_col).over(w).alias("rep"),
+    )
+    small = (
+        sized.filter((F.col("n") >= 2) & (F.col("n") <= bucket_cap))
+        .groupBy("band", "mh")
+        .agg(F.collect_list(F.col(id_col)).alias("ids"))
+    )
+    small_pairs = (
+        small.select(F.explode("ids").alias("doc_a"), "ids")
+        .select("doc_a", F.explode("ids").alias("doc_b"))
+        .filter(F.col("doc_a") < F.col("doc_b"))
+    )
+    star_pairs = (
+        sized.filter((F.col("n") > bucket_cap) & (F.col(id_col) != F.col("rep")))
+        .select(F.col("rep").alias("doc_a"), F.col(id_col).alias("doc_b"))
+    )
+    return small_pairs.unionByName(star_pairs).distinct()
+
+
+def _lsh_corpus(spark, cap, n_random=300, n_planted=40, seed=7):
+    """Seeded random docs, planted one-word-edit near-duplicates, a bucket of
+    exactly ``cap`` identical docs (ids 1000..), one of ``cap + 1`` (ids
+    2000..) and two null texts (ids 3000, 3001), in 4 partitions."""
+    import random
+
+    rng = random.Random(seed)
+    vocab = [f"w{i}" for i in range(400)]
+    texts = [" ".join(rng.choice(vocab) for _ in range(40)) for _ in range(n_random)]
+    rows = list(enumerate(texts))
+    for j in range(n_planted):
+        words = texts[j].split()
+        words[rng.randrange(len(words))] = "edited"
+        rows.append((500 + j, " ".join(words)))
+    at_cap, above_cap = "lorem ipsum footer " * 3, "copyright all rights reserved " * 3
+    rows += [(1000 + i, at_cap) for i in range(cap)]
+    rows += [(2000 + i, above_cap) for i in range(cap + 1)]
+    rows += [(3000, None), (3001, None)]
+    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), "doc_id long, text string")
+
+
+def _executed_nodes(df) -> list:
+    """Run ``df`` once and list the nodes of its final physical plan, with
+    expression ids stripped. Adaptive plans and query stages are entered;
+    a reused exchange and the plan behind a cached relation are not, since
+    neither is evaluated again."""
+    import re
+
+    df.collect()
+    out, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+        elif cls.endswith("QueryStageExec"):
+            todo.append(node.plan())
+        else:
+            out.append(re.sub(r"#\d+L?", "", node.simpleString(25)))
+            kids = node.children()
+            todo.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+def test_minhash_lsh_pairs_matches_reference_around_cap(spark):
+    """The one-pass plan returns the same pair set as the former two-branch
+    plan on planted near-dups, a bucket of exactly ``bucket_cap`` members
+    (all-pairs), one of ``bucket_cap + 1`` (a star at the min id) and null
+    texts (which share the (band, NULL) buckets)."""
+    cap = 8
+    d = _lsh_corpus(spark, cap)
+    got = {(r["doc_a"], r["doc_b"]) for r in dedup.minhash_lsh_pairs(d, bucket_cap=cap).collect()}
+    want = {(r["doc_a"], r["doc_b"]) for r in _minhash_lsh_pairs_reference(d, cap).collect()}
+    assert got == want
+    at_cap = {(a, b) for a, b in got if 1000 <= a < 2000}
+    assert at_cap == {(1000 + i, 1000 + j) for i in range(cap) for j in range(i + 1, cap)}
+    above = {(a, b) for a, b in got if 2000 <= a < 3000}
+    assert above == {(2000, 2000 + i) for i in range(1, cap + 1)}
+    assert (3000, 3001) in got
+    assert sum(1 for j in range(40) if (j, 500 + j) in got) >= 36
+
+
+def test_minhash_lsh_pairs_one_python_evaluation(spark):
+    """The signature UDF runs once per document, and the band-bucket stage
+    shuffles only on (band, mh) and for the final distinct. The input is a
+    cached frame, as in the benchmark; on it the former two-branch plan did
+    not reuse the band exchange and ran the UDF twice."""
+    d = _lsh_corpus(spark, 8).cache()
+    nodes = _executed_nodes(dedup.minhash_lsh_pairs(d, bucket_cap=8))
+    d.unpersist()
+    assert sum(n.startswith("ArrowEvalPython") for n in nodes) == 1
+    exchanges = sorted(n.split("), ")[0] + ")" for n in nodes if n.startswith("Exchange "))
+    assert exchanges == ["Exchange hashpartitioning(band, mh, 4)",
+                         "Exchange hashpartitioning(doc_a, doc_b, 4)"]
+
+
+def test_minhash_signature_spread(spark):
+    """A 1-partition input still runs the signature UDF on defaultParallelism
+    tasks; an input with >= defaultParallelism partitions is not spread."""
+    dp = spark.sparkContext.defaultParallelism
+    d = _lsh_corpus(spark, 8)
+    assert d.rdd.getNumPartitions() >= dp
+    narrow = d.coalesce(1)
+    assert narrow.rdd.getNumPartitions() == 1
+    sig = dedup.minhash_signature(narrow)
+    assert sig.rdd.getNumPartitions() == dp
+    assert any(f"RoundRobinPartitioning({dp})" in n for n in _executed_nodes(sig))
+    wide = _executed_nodes(dedup.minhash_lsh_pairs(d, bucket_cap=8))
+    assert not any("RoundRobinPartitioning" in n for n in wide)
+
+
 def test_simhash_hot_bucket_bounded(spark):
     """Same star routing for simhash: 300 identical docs > bucket_cap → k-1
     star pairs with hamming 0, single component downstream."""
