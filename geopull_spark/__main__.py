@@ -41,13 +41,6 @@ def main(argv: list[str] | None = None) -> int:
     sp = sub.add_parser("assign")
     common(sp)
     sp.add_argument("--sf-dir", default="/root/testdata/sf0.001")
-    sp.add_argument("--steady", action="store_true",
-                    help="assign against the bucketed tables written by prepare-assign")
-    # steady-state ingestion: persist the blocks-side join inputs as bucketed
-    # tables once per blocks snapshot (engine addition, SURVEY §2.9 analog)
-    sp = sub.add_parser("prepare-assign")
-    common(sp)
-    sp.add_argument("--prefix", default="assign")
     # reference export subcommand (__main__.py:48-52, args :178-200):
     # user-specified attributes / osmium-style tag filters / geometry type
     sp = sub.add_parser("export")
@@ -90,8 +83,6 @@ def main(argv: list[str] | None = None) -> int:
             return 0
     if args.cmd in ("extract", "normalize", "block", "pipeline", "export"):
         ways = t("osm_ways").read(spark)
-    if args.cmd == "prepare-assign":
-        pass  # handled below; needs only the blocks snapshot
     if args.cmd == "export":
         out = extract.export_ways(
             ways, args.attributes, args.include_tags, args.geometry_type
@@ -130,27 +121,11 @@ def main(argv: list[str] | None = None) -> int:
         print(f"blocks snapshot {m['snapshot_id']}: {m['row_count']} blocks")
         if args.cmd == "block":
             return 0
-    if args.cmd == "prepare-assign":
-        blocks = t("blocks").read(spark)
-        spatial_join.prepare_bucketed_assignment(blocks, prefix=args.prefix)
-        print(f"bucketed tables {args.prefix}_block_cells / {args.prefix}_refine_geom written")
-        return 0
     if args.cmd in ("assign", "pipeline"):
         sf_dir = getattr(args, "sf_dir", "/root/testdata/sf0.001")
         blocks = t("blocks").read(spark)
         docs = synth.interleaved_documents(spark, sf_dir, n_regions=args.regions)
-        if getattr(args, "steady", False):
-            # bucketed-table registrations live in the session catalog; with
-            # the sandbox's in-memory catalog a fresh CLI process re-prepares
-            # them (cheap vs ingestion volume). A deployment with a shared
-            # metastore (hive/iceberg catalog) skips this.
-            if not spark.catalog.tableExists("assign_block_cells"):
-                spatial_join.prepare_bucketed_assignment(blocks, prefix="assign")
-            pts = spatial_join.assign_docs_steady(docs.select("doc_id", "lon", "lat"))
-            assigned = docs.join(pts.select("doc_id", "block_id"), "doc_id", "left")
-        else:
-            bc = spatial_join.build_block_cell_index(blocks)
-            assigned = spatial_join.assign_docs_full(docs, blocks, bc)
+        assigned = spatial_join.assign_docs_full(docs, blocks)
         m = t("doc_blocks").commit(
             assigned, f"{fp}|docs:{sf_dir}",
             partition_count_col="region_code", lineage=[fp, f"docs:{sf_dir}"],

@@ -107,6 +107,65 @@ def segments_intersect_bbox(seg: np.ndarray, minx, miny, maxx, maxy) -> np.ndarr
     return (sx1 >= minx) & (sx0 <= maxx) & (sy1 >= miny) & (sy0 <= maxy)
 
 
+def _grid_key(level: np.ndarray, cx: np.ndarray, cy: np.ndarray) -> np.ndarray:
+    return (level << 58) | (cx << 29) | cy
+
+
+def points_in_boxes(px: np.ndarray, py: np.ndarray, minx: np.ndarray,
+                    miny: np.ndarray, maxx: np.ndarray,
+                    maxy: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Every (point, box) pair with the point inside the CLOSED box, as two
+    index arrays (point row, box row).
+
+    A multi-level grid keeps memory near the output size. The level-0 cell
+    is the median box; each box sits at the lowest level whose cell is at
+    least its extent, so it covers at most 2×2 cells there. A region-sized
+    box therefore costs a few entries at a coarse level, not thousands at
+    level 0, and each point probes one cell per level in use: O(boxes +
+    points × levels + pairs). Cell indices are computed with the same float
+    operations for points and box corners, and floor is monotone, so a
+    point inside a box always lands in one of its cells; an exact bbox test
+    then drops the false candidates."""
+    empty = np.zeros(0, dtype=np.int64)
+    if len(px) == 0 or len(minx) == 0:
+        return empty, empty
+    x0, y0, x1, y1 = minx.min(), miny.min(), maxx.max(), maxy.max()
+    # points outside the boxes' joint extent are in no box; the rest get
+    # non-negative cell indices
+    pts = np.flatnonzero((px >= x0) & (px <= x1) & (py >= y0) & (py <= y1))
+    if len(pts) == 0:
+        return empty, empty
+    bw, bh = maxx - minx, maxy - miny
+    tiny = np.finfo(np.float64).tiny
+    # at most 2^20 level-0 cells across the extent, so every key fits 29 bits
+    cw = max(float(np.median(bw)), (x1 - x0) * 2.0**-20, tiny)
+    ch = max(float(np.median(bh)), (y1 - y0) * 2.0**-20, tiny)
+    level = np.ceil(np.log2(np.maximum(np.maximum(bw / cw, bh / ch), 1.0))).astype(np.int64)
+    sx, sy = cw * np.ldexp(1.0, level), ch * np.ldexp(1.0, level)
+    gx0 = np.floor((minx - x0) / sx).astype(np.int64)
+    gy0 = np.floor((miny - y0) / sy).astype(np.int64)
+    nx = np.floor((maxx - x0) / sx).astype(np.int64) - gx0 + 1
+    ny = np.floor((maxy - y0) / sy).astype(np.int64) - gy0 + 1
+    cnt = nx * ny
+    box = np.repeat(np.arange(len(minx), dtype=np.int64), cnt)
+    k = np.arange(len(box), dtype=np.int64) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+    key = _grid_key(level[box], gx0[box] + k // ny[box], gy0[box] + k % ny[box])
+    order = np.argsort(key, kind="stable")
+    key, box = key[order], box[order]
+    levels = np.unique(level)
+    qp = np.repeat(pts, len(levels))
+    ql = np.tile(levels, len(pts))
+    qs = np.ldexp(1.0, ql)
+    qkey = _grid_key(ql, np.floor((px[qp] - x0) / (cw * qs)).astype(np.int64),
+                     np.floor((py[qp] - y0) / (ch * qs)).astype(np.int64))
+    lo = np.searchsorted(key, qkey, "left")
+    n = np.searchsorted(key, qkey, "right") - lo
+    pi = np.repeat(qp, n)
+    bi = box[np.repeat(lo - (np.cumsum(n) - n), n) + np.arange(len(pi), dtype=np.int64)]
+    inside = (px[pi] >= minx[bi]) & (px[pi] <= maxx[bi]) & (py[pi] >= miny[bi]) & (py[pi] <= maxy[bi])
+    return pi[inside], bi[inside]
+
+
 def build_edge_soup(geoms: list) -> tuple[np.ndarray, ...]:
     """Flatten a list of (Multi)Polygons into one concatenated edge table for
     :func:`points_in_geoms`: (x0, y0, x1, y1, start) where geometry i owns

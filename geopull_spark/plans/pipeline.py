@@ -56,8 +56,7 @@ def run_pipeline(
         blocks = t_blocks.read(spark)
 
     docs = synth.interleaved_documents(spark, sf_dir)
-    block_cells = spatial_join.build_block_cell_index(blocks)
-    assigned = spatial_join.assign_docs_full(docs, blocks, block_cells)
+    assigned = spatial_join.assign_docs_full(docs, blocks)
     if use_manifest:
         fp_docs = f"{fp_world}|docs:{sf_dir}"
         t_asg = SnapshotTable(os.path.join(warehouse, "doc_blocks"))

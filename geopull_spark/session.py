@@ -13,13 +13,30 @@ import sys
 from pyspark.sql import SparkSession
 
 
+def default_cpus() -> int:
+    """Local cores: ``SPARK_GRAFT_CPUS``, else every CPU of the host."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
+def default_driver_memory(meminfo_path: str = "/proc/meminfo") -> str:
+    """Driver JVM heap: ``SPARK_DRIVER_MEM``, else half of the host's
+    ``MemTotal`` (at least 1 GB). In local mode this heap holds the
+    executors too, so it is sized to the host rather than fixed."""
+    spec = os.environ.get("SPARK_DRIVER_MEM")
+    if spec:
+        return spec
+    with open(meminfo_path) as f:
+        kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    return f"{max(kb // 2048, 1024)}m"
+
+
 def get_spark(
     app_name: str = "geopull_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "8"
@@ -58,7 +75,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", default_driver_memory())
     )
     # Python workers launch through a PYTHONPATH-sanitizing wrapper: with
     # pyspark.zip (and inherited jars) on the worker path, CPython 3.11's

@@ -3,9 +3,8 @@ plan variant forks the frozen outputs.
 
 Runs at sf0.001 (fast, CI-style):
   1. full pipeline → blocks (broadcast + cells line routing)
-  2. doc→block assignment via FOUR variants: cogroup plan, cogroup+salt_k=4,
-     the bucketed steady-state plan (prepare_bucketed_assignment +
-     assign_docs_steady), and the streaming AvailableNow path
+  2. doc→block assignment via THREE variants: the cogroup plan,
+     cogroup+salt_k=4, and the streaming AvailableNow path
   3. compares md5 fingerprints of the sorted output rows against the frozen
      hashes below (and each variant against the others)
 
@@ -81,24 +80,11 @@ def main() -> int:
 
     # -- assignment via every plan variant ---------------------------------
     docs = synth.interleaved_documents(spark, SF).select("doc_id", "lon", "lat").cache()
-    bc = spatial_join.build_block_cell_index(blocks_ref).cache()
     assign_hashes = {}
-    def _steady():
-        spatial_join.prepare_bucketed_assignment(blocks_ref, prefix="det_gate_assign")
-        return spatial_join.assign_docs_steady(docs, prefix="det_gate_assign")
-
-    variants = {
-        "cogroup": lambda: spatial_join.assign_docs_to_blocks(docs, blocks_ref, bc),
-        "cogroup_salt4": lambda: spatial_join.assign_docs_to_blocks(
-            docs, blocks_ref, bc, salt_k=4),
-        "steady_bucketed": _steady,
-    }
-    for name, fn in variants.items():
-        rows = [(r["doc_id"], r["block_id"]) for r in
-                fn().select("doc_id", "block_id").collect()]
+    for name, salt_k in (("cogroup", 0), ("cogroup_salt4", 4)):
+        rows = [(r["doc_id"], r["block_id"]) for r in spatial_join.assign_docs_to_blocks(
+            docs, blocks_ref, salt_k=salt_k).select("doc_id", "block_id").collect()]
         assign_hashes[name] = _md5(rows)
-    for t in ("det_gate_assign_block_cells", "det_gate_assign_refine_geom"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
 
     # streaming AvailableNow path
     tmp = tempfile.mkdtemp(prefix="det_gate_")

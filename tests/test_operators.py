@@ -2,6 +2,7 @@
 zonal. Recall/behavior checks against brute-force ground truth on the driver
 testdata."""
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -353,11 +354,104 @@ def test_assignment_against_empty_index_is_empty(spark):
     rows, with the assignment schema, salted or not."""
     docs = synth.interleaved_documents(spark, SF).select("doc_id", "lon", "lat")
     bc = spark.createDataFrame([], "cell long, cell_res int, region_code string, block_id string")
-    gc = spark.createDataFrame([], "g_pcell long, g_block_id string, g_geometry binary")
+    gc = spark.createDataFrame([], "g_pcell long, g_block_id string, g_geometry binary, "
+                                   "minx double, miny double, maxx double, maxy double")
     for out in (spatial_join.assign_docs_to_blocks(docs, None, bc, geom_cells=gc),
                 spatial_join.assign_docs_to_blocks(docs, None, bc, salt_k=4, geom_cells=gc)):
         assert out.columns == ["doc_id", "lon", "lat", "block_id"]
         assert out.count() == 0
+
+
+def _refine_group():
+    """One refine group as Arrow tables: a region-sized block whose hole
+    holds a 12×12 grid of small square blocks, a triangle and two blocks
+    with the same footprint; docs at random, on the grid's vertices and
+    shared edges, on every bbox edge and outside every block."""
+    import pyarrow as pa
+
+    from geopull_spark.kernels import wkb as kwkb
+
+    s = 0.25
+    blocks = [(f"s{i:02d}{j:02d}", kwkb.polygon(
+        [(10 + i * s, 10 + j * s), (10 + (i + 1) * s, 10 + j * s),
+         (10 + (i + 1) * s, 10 + (j + 1) * s), (10 + i * s, 10 + (j + 1) * s)]))
+        for i in range(12) for j in range(12)]
+    blocks.append(("big", kwkb.polygon([(0, 0), (30, 0), (30, 30), (0, 30)],
+                                       holes=[[(10, 10), (13, 10), (13, 13), (10, 13)]])))
+    blocks.append(("tri", kwkb.polygon([(40, 0), (45, 0), (40, 5)])))
+    # two blocks on one footprint: their docs tie and go to the min block_id
+    blocks += [(b, kwkb.polygon([(35, 25), (37, 25), (37, 27), (35, 27)])) for b in ("dupB", "dupA")]
+    rng = np.random.default_rng(3)
+    pts = [tuple(p) for p in rng.uniform([-2, -2], [47, 32], (400, 2))]
+    pts += [(10 + i * s, 10 + j * s + h) for i in range(13) for j in range(13) for h in (0, s / 2)]
+    pts += [(0, 15), (30, 15), (15, 0), (15, 30), (0, 0), (30, 30),
+            (40, 0), (45, 0), (40, 5), (42.5, 2.5), (40, 2.5), (36, 26),
+            (35, 20), (-5, -5), (100, 100)]
+    docs = pa.table({"pcell": [0] * len(pts), "doc_id": [str(i) for i in range(len(pts))],
+                     "lon": [float(x) for x, _ in pts], "lat": [float(y) for _, y in pts]})
+    bounds = [kwkb.bounds(kwkb.loads(b)) for _, b in blocks]
+    geom = pa.table({"g_pcell": [0] * len(blocks), "g_block_id": [b for b, _ in blocks],
+                     "g_geometry": pa.array([g for _, g in blocks], pa.binary()),
+                     **{c: [bb[k] for bb in bounds]
+                        for k, c in enumerate(("minx", "miny", "maxx", "maxy"))}})
+    return docs, geom
+
+
+def test_refine_kernel_matches_brute_force_in_one_group():
+    """The refine kernel's in-group candidate search against a reference
+    that tests every doc against every block (bbox filter, then
+    ``point_in_geom``) and keeps the min block_id; an empty side gives no
+    rows."""
+    from geopull_spark.kernels import wkb as kwkb
+    from geopull_spark.kernels.pointops import point_in_geom
+
+    docs, geom = _refine_group()
+    want = {}
+    for d, x, y in zip(*(docs.column(c).to_pylist() for c in ("doc_id", "lon", "lat"))):
+        for b, buf in sorted(zip(geom.column("g_block_id").to_pylist(),
+                                 geom.column("g_geometry").to_pylist())):
+            g = kwkb.loads(buf)
+            x0, y0, x1, y1 = kwkb.bounds(g)
+            if x0 <= x <= x1 and y0 <= y <= y1 and point_in_geom(np.array([x]), np.array([y]), g)[0]:
+                want[d] = (b, x, y)
+                break
+    out = spatial_join._pip_refine_cogroup(docs, geom)
+    assert out.column_names == ["doc_id", "lon", "lat", "block_id"]
+    rows = list(zip(*(out.column(c).to_pylist() for c in out.column_names)))
+    got = {d: (b, x, y) for d, x, y, b in rows}
+    assert len(got) == len(rows)
+    assert got == want
+    hit = {b for b, _, _ in want.values()}
+    assert {"big", "tri", "dupA"} <= hit and "dupB" not in hit
+    assert len(hit) > 100 and len(want) < docs.num_rows
+    for empty in (spatial_join._pip_refine_cogroup(docs, geom.slice(0, 0)),
+                  spatial_join._pip_refine_cogroup(docs.slice(0, 0), geom)):
+        assert empty.num_rows == 0 and empty.column_names == out.column_names
+
+
+def test_assignment_is_one_doc_shuffle_into_one_cogroup(spark):
+    """Against a cached refine geometry the executed plan shuffles only the
+    doc batch, into one Arrow cogroup, with no broadcast join. Salted, both
+    sides shuffle on (parent cell, salt)."""
+    zones = synth.rect_zones(spark)
+    gc = spatial_join.build_refine_geometry(zones).cache()
+    docs = synth.interleaved_documents(spark, SF).select("doc_id", "lon", "lat")
+    n = spatial_join._refine_partitions(docs)
+
+    def exchanges(nodes):
+        return sorted(x.split("), ")[0] + ")" for x in nodes if x.startswith("Exchange "))
+
+    try:
+        nodes = _executed_nodes(spatial_join.assign_docs_to_blocks(docs, zones, geom_cells=gc))
+        assert exchanges(nodes) == [f"Exchange hashpartitioning(pcell, {n})"]
+        assert sum(x.startswith("FlatMapCoGroupsInArrow") for x in nodes) == 1
+        assert not any("BroadcastHashJoin" in x for x in nodes)
+        salted = _executed_nodes(
+            spatial_join.assign_docs_to_blocks(docs, zones, geom_cells=gc, salt_k=4))
+        assert exchanges(salted) == [f"Exchange hashpartitioning(g_pcell, g_salt, {n})",
+                                     f"Exchange hashpartitioning(pcell, salt, {n})"]
+    finally:
+        gc.unpersist()
 
 
 def test_ivf_recall_vs_brute(spark):

@@ -9,7 +9,6 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from geopull_spark.functions import cellexpr
 from geopull_spark.functions.geometry import st_area_m2
 from geopull_spark.kernels import area as karea
 from geopull_spark.kernels import wkb as kwkb
@@ -143,8 +142,7 @@ def test_doc_assignment_and_span_invariant(spark, world):
     """J7 assignment + the per-row span-sequence invariant (kind, text,
     media_ref, order) preserved through the shuffle-join."""
     docs = synth.interleaved_documents(spark, SF).cache()
-    bc = spatial_join.build_block_cell_index(world["blocks"])
-    out = spatial_join.assign_docs_full(docs, world["blocks"], bc).cache()
+    out = spatial_join.assign_docs_full(docs, world["blocks"]).cache()
     assert out.count() == docs.count()  # left join keeps every doc
     assigned = out.filter(F.col("block_id").isNotNull())
     assert assigned.count() > 0.8 * docs.count()  # most docs are on land
@@ -319,31 +317,6 @@ def test_cli_export_and_version(spark, tmp_path, capsys):
     assert pq.count() > 0
 
 
-def test_bucketed_cell_join_no_shuffle(spark, world, tmp_path):
-    """Co-located join layout: block-cell index and doc cells both bucketed
-    by `cell` → the assignment candidate join plans with NO Exchange."""
-    from geopull_spark.sources.bucketed import write_bucketed
-
-    bc = spatial_join.build_block_cell_index(world["blocks"])
-    docs = synth.interleaved_documents(spark, SF).select("doc_id", "lon", "lat")
-    d = cellexpr.with_cell(docs, spatial_join.INDEX_RES)
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        write_bucketed(bc, "bkt_index", ["cell"], n_buckets=8, sort_cols=["cell"])
-        write_bucketed(d, "bkt_docs", ["cell"], n_buckets=8, sort_cols=["cell"])
-        j = spark.table("bkt_docs").join(spark.table("bkt_index"), "cell")
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan[:2000]
-        # and it still produces the right candidate count
-        shuffled = d.join(bc, "cell")
-        assert j.count() == shuffled.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        spark.sql("DROP TABLE IF EXISTS bkt_index")
-        spark.sql("DROP TABLE IF EXISTS bkt_docs")
-
-
 def test_subtract_by_region_both_paths(spark):
     """J3 API surface: empty-right regions pass through with zero decode
     (bbox columns reused, canonical order kept); non-empty right subtracts."""
@@ -423,40 +396,6 @@ def test_many_part_region_routes_identically(spark):
     assert a == b
     # auto picks the cells path above the threshold
     assert n_parts > bk.PART_BROADCAST_MAX
-
-
-def test_assign_docs_steady_bucketed_identical(spark, world):
-    """VERDICT r3 #8: the steady-state bucketed assignment path (blocks-side
-    inputs read pre-partitioned from bucketed tables) returns IDENTICAL rows
-    to the direct plan, and the blocks-side exchanges disappear from the
-    candidate join."""
-    docs = synth.interleaved_documents(spark, SF).select("doc_id", "lon", "lat")
-    try:
-        spatial_join.prepare_bucketed_assignment(world["blocks"], prefix="t_steady", n_buckets=8)
-        steady = sorted(
-            (r["doc_id"], r["block_id"])
-            for r in spatial_join.assign_docs_steady(docs, prefix="t_steady").collect()
-        )
-        direct = sorted(
-            (r["doc_id"], r["block_id"])
-            for r in spatial_join.assign_docs_to_blocks(docs, world["blocks"]).collect()
-        )
-        assert steady == direct and len(steady) > 0
-        # the bucketed index side of the candidate join must not re-shuffle:
-        # its table scan appears with no Exchange directly above it
-        bc = spark.table("t_steady_block_cells")
-        d = cellexpr.with_cell(docs, spatial_join.INDEX_RES)
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        try:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            plan = d.join(bc.select("cell", "block_id"), "cell")._jdf.queryExecution().executedPlan().toString()
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        # exactly one Exchange (the doc side); the bucketed side has none
-        assert plan.count("Exchange") == 1, plan[:2000]
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_steady_block_cells")
-        spark.sql("DROP TABLE IF EXISTS t_steady_refine_geom")
 
 
 def test_manifest_file_pruning_read_range(spark, tmp_path):
@@ -643,6 +582,31 @@ def test_get_spark_session_settings(spark):
     assert conf.get("spark.sql.requireAllClusterKeysForCoPartition") == "false"
     sc_conf = spark.sparkContext.getConf()
     assert sc_conf.get("spark.shuffle.sort.bypassMergeThreshold") == "2"
+
+
+def test_get_spark_default_cores_fit_the_host(monkeypatch):
+    """Without SPARK_GRAFT_CPUS a session gets one local core per CPU."""
+    from geopull_spark.session import default_cpus
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_cpus() == os.cpu_count()
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_cpus() == 3
+
+
+def test_get_spark_default_driver_memory_fits_the_host(monkeypatch, tmp_path):
+    """Without SPARK_DRIVER_MEM the driver heap is half of MemTotal, so a
+    host smaller than the former fixed 48g gets a heap it can hold."""
+    from geopull_spark.session import default_driver_memory
+
+    meminfo = tmp_path / "meminfo"
+    meminfo.write_text("MemFree:  1000 kB\nMemTotal:       16303604 kB\n")
+    monkeypatch.delenv("SPARK_DRIVER_MEM", raising=False)
+    assert default_driver_memory(str(meminfo)) == "7960m"
+    meminfo.write_text("MemTotal:  1000000 kB\n")
+    assert default_driver_memory(str(meminfo)) == "1024m"
+    monkeypatch.setenv("SPARK_DRIVER_MEM", "3g")
+    assert default_driver_memory(str(meminfo)) == "3g"
 
 
 def _geohash_blocks(blocks: list, areas: list, regions: list,
