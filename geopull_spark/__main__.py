@@ -26,6 +26,8 @@ import sys
 
 
 def main(argv: list[str] | None = None) -> int:
+    from .session import default_cpus, get_spark
+
     p = argparse.ArgumentParser(prog="geopull_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
 
@@ -33,7 +35,7 @@ def main(argv: list[str] | None = None) -> int:
         sp.add_argument("--warehouse", required=True)
         sp.add_argument("--regions", type=int, default=3)
         sp.add_argument("--streets", type=int, default=60)
-        sp.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
+        sp.add_argument("--cpus", type=int, default=default_cpus())
 
     for name in ["download", "generate", "extract", "normalize", "block", "pipeline"]:
         sp = sub.add_parser(name)
@@ -62,7 +64,6 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import functions as F
 
     from .operators import blocker, extract, normalize, spatial_join
-    from .session import get_spark
     from .sources import synth
     from .sources.manifest import SnapshotTable
 

@@ -129,16 +129,13 @@ def parent_expr(cell: str, cell_res: int, parent_res: int) -> Column:
 def with_cover_cells(
     df: DataFrame,
     res: int,
-    minx: str = "minx",
-    miny: str = "miny",
-    maxx: str = "maxx",
-    maxy: str = "maxy",
     out: str = "cell",
     target: int | None = 48,
     res_out: str = "cell_res",
 ) -> DataFrame:
-    """Explode each row onto the cells covering its bbox — the UDTF-style
-    cover (SURVEY §2.10) as two JVM ``sequence``+``explode`` generates.
+    """Explode each row onto the cells covering its bbox (columns ``minx``,
+    ``miny``, ``maxx``, ``maxy``) — the UDTF-style cover (SURVEY §2.10) as
+    two JVM ``sequence``+``explode`` generates.
 
     ``target`` caps the per-axis tile count by LOWERING the resolution for
     oversized bboxes (per row): a geometry spanning the whole region no longer
@@ -149,10 +146,10 @@ def with_cover_cells(
     both cogroup sides must share one resolution).
     """
     df = df.withColumns({
-        "_fx0": F.expr(lon_fraction_sql(minx)),
-        "_fx1": F.expr(lon_fraction_sql(maxx)),
-        "_fy0": F.expr(lat_fraction_sql(miny)),
-        "_fy1": F.expr(lat_fraction_sql(maxy)),
+        "_fx0": F.expr(lon_fraction_sql("minx")),
+        "_fx1": F.expr(lon_fraction_sql("maxx")),
+        "_fy0": F.expr(lat_fraction_sql("miny")),
+        "_fy1": F.expr(lat_fraction_sql("maxy")),
     })
     if target is None:
         res_eff = F.lit(res)

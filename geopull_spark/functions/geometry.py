@@ -13,7 +13,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
@@ -215,7 +214,3 @@ def st_normalize(wkb_col: pd.Series) -> pd.Series:
         else:
             out.append(_wkb.dumps(_overlay.normalize_geom(_wkb.loads(bytes(buf)))))
     return pd.Series(out, dtype=object)
-
-
-def with_bbox(df, wkb_name: str = "geometry"):
-    return df.withColumn("bbox", st_bbox(F.col(wkb_name)))

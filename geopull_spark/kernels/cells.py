@@ -158,8 +158,7 @@ def cover_bbox(minx: float, miny: float, maxx: float, maxy: float, res: int,
     ``minx > maxx`` means the bbox crosses the antimeridian: the lon range
     wraps, covering [minx, 180) ∪ [-180, maxx] (mirrored in the JVM cover,
     ``cellexpr.with_cover_cells``). ``cap`` guards against degenerate huge
-    covers (caller should pick res by geometry size; see
-    :func:`res_for_extent`).
+    covers (caller should pick res by geometry size).
     """
     n = 1 << res
     fx0 = lon_fraction(np.asarray(minx))
@@ -208,14 +207,6 @@ def k_ring(cell: np.ndarray, k: int = 1) -> np.ndarray:
         res_b.ravel().astype(np.uint64) << np.uint64(58)
     )
     return flat.astype(np.int64).reshape(nx.shape)
-
-
-def res_for_extent(width_deg: float, target_cells: int = 16) -> int:
-    """Pick a resolution so the extent spans roughly ``target_cells`` tiles."""
-    if width_deg <= 0:
-        return MAX_RES
-    r = int(np.log2(max(360.0 / width_deg, 1.0) * target_cells ** 0.5))
-    return int(np.clip(r, 0, MAX_RES))
 
 
 def cell_bounds(cell: int) -> tuple[float, float, float, float]:

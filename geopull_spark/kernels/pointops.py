@@ -98,15 +98,6 @@ def representative_point(rings: list[np.ndarray]) -> tuple[float, float]:
     return float(0.5 * (xs[2 * i] + xs[2 * i + 1])), float(y)
 
 
-def segments_intersect_bbox(seg: np.ndarray, minx, miny, maxx, maxy) -> np.ndarray:
-    """Quick bbox rejection for segment arrays shaped (n, 4) = x0,y0,x1,y1."""
-    sx0 = np.minimum(seg[:, 0], seg[:, 2])
-    sx1 = np.maximum(seg[:, 0], seg[:, 2])
-    sy0 = np.minimum(seg[:, 1], seg[:, 3])
-    sy1 = np.maximum(seg[:, 1], seg[:, 3])
-    return (sx1 >= minx) & (sx0 <= maxx) & (sy1 >= miny) & (sy0 <= maxy)
-
-
 def _grid_key(level: np.ndarray, cx: np.ndarray, cy: np.ndarray) -> np.ndarray:
     return (level << 58) | (cx << 29) | cy
 

@@ -18,27 +18,10 @@ _B = np.uint64(257)
 _P = np.uint64((1 << 31) - 1)
 
 
-def kgram_hashes(data: bytes, k: int) -> np.ndarray:
-    """All k-gram rolling hashes of a byte string (len n-k+1), uint64."""
-    b = np.frombuffer(data, dtype=np.uint8).astype(np.uint64)
-    n = len(b)
-    if n == 0:
-        return np.zeros(0, dtype=np.uint64)
-    if n < k:
-        k = n
-    # prefix hashes P[i] = hash of b[:i]
-    pref = np.zeros(n + 1, dtype=np.uint64)
-    for i in range(n):  # sequential dependency — but pure uint64 ops
-        pref[i + 1] = (pref[i] * _B + b[i]) % _P
-    bk = np.uint64(pow(int(_B), k, int(_P)))
-    starts = pref[: n - k + 1]
-    ends = pref[k:]
-    return (ends + _P * _P - (starts * bk) % _P) % _P
-
-
 def kgram_hashes_fast(data: bytes, k: int) -> np.ndarray:
-    """Vectorized variant: O(n log k)-ish via doubling instead of the python
-    prefix loop — combine adjacent j-gram hashes into 2j-gram hashes."""
+    """All k-gram rolling hashes of a byte string (len n-k+1), uint64.
+    O(n log k)-ish via doubling: combine adjacent j-gram hashes into 2j-gram
+    hashes, with no per-byte Python loop."""
     b = np.frombuffer(data, dtype=np.uint8).astype(np.uint64)
     n = len(b)
     if n == 0:

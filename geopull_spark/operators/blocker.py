@@ -30,8 +30,9 @@ dissolve, so clipping/noding/polygonizing per part is semantically identical
 to per-region (no segment crosses between disjoint parts; holes, overlap
 correction and residual add-back are all part-local) while a
 continental-scale region no longer serializes onto one Python worker. Lines
-are routed to parts by a broadcast bbox join (a line crossing several parts
-is clipped in each). The geohash→georank block-ID assignment
+are routed to parts by one bbox join against the collected part boxes,
+broadcast as a literal relation (a line crossing several parts is clipped in
+each). The geohash→georank block-ID assignment
 (blocker.py:296-322) moved OUT of the kernel into a Spark window function
 (row_number over (region, geohash) ordered by canonical WKB), which is
 exactly the reference's cumcount-after-sort semantics computed region-wide —
@@ -134,8 +135,7 @@ def _make_blocks(land_parts: list, line_geoms: list) -> list:
     return [("Polygon", rings) for rings in faces]
 
 
-def _remove_overlaps(blocks: list, areas: list, region: str,
-                     land_area: float | None = None) -> tuple[list, list]:
+def _remove_overlaps(blocks: list, areas: list, land_area: float) -> tuple[list, list]:
     """blocker.py:82-164. Polygonize faces are disjoint by construction, so
     when Σ block areas ≤ land area (+1 m², the reference's own sliver
     threshold at blocker.py:100) no overlap can exist and the O(n²) pair scan
@@ -148,7 +148,7 @@ def _remove_overlaps(blocks: list, areas: list, region: str,
     n = len(blocks)
     if n < 2:
         return blocks, areas
-    if land_area is not None and sum(areas) <= land_area + 1.0:
+    if sum(areas) <= land_area + 1.0:
         return blocks, areas
     boxes = np.array([_wkb.bounds(b) for b in blocks])
     pairs = []
@@ -433,7 +433,7 @@ def _block_cogroup(land_pdf: pd.DataFrame, lines_pdf: pd.DataFrame) -> pd.DataFr
         for p in _wkb.get_parts(_wkb.loads(bytes(buf))):
             if p[0] == "Polygon":
                 land_parts.append(p)
-    line_geoms = [_wkb.loads(bytes(b)) for b in lines_pdf["geometry"]] if len(lines_pdf) else []
+    line_geoms = [_wkb.loads(bytes(b)) for b in lines_pdf["l_geometry"]] if len(lines_pdf) else []
 
     blocks = _make_blocks(land_parts, line_geoms)
     # no _validate here: extract_faces emits simple rings by construction
@@ -470,7 +470,7 @@ def _block_cogroup(land_pdf: pd.DataFrame, lines_pdf: pd.DataFrame) -> pd.DataFr
                 new_areas.append(a)
         blocks, areas = new_blocks, new_areas
 
-    blocks, areas = _remove_overlaps(blocks, areas, region, land_area=land_area)
+    blocks, areas = _remove_overlaps(blocks, areas, land_area)
 
     # _residual_area_check (blocker.py:166-200); >1 m² threshold — float
     # epsilon residues produce empty geometry in the reference too, this
@@ -492,94 +492,27 @@ def _block_cogroup(land_pdf: pd.DataFrame, lines_pdf: pd.DataFrame) -> pd.DataFr
     )
 
 
-def build_blocks(land: DataFrame, lines: DataFrame, route: str = "auto") -> DataFrame:
+def build_blocks(land: DataFrame, lines: DataFrame) -> DataFrame:
     """land parts + extracted linestrings → blocks.
 
     One geometry kernel per (region, land_part): lines are routed to parts by
-    a bbox join (literal-broadcast part boxes when parts are few; cell-key
-    equi-join above ``PART_BROADCAST_MAX`` parts — see ``build_blocks_pre``),
-    each part polygonizes independently, then the block IDs are assigned by a
-    region-wide window (georank = cumcount within (region, geohash) ordered
-    by canonical WKB — the reference's sort+cumcount at blocker.py:296-322,
-    bit-identical to the r1 per-region kernel output)."""
-    return assign_block_ids(build_blocks_pre(land, lines, route=route))
+    a bbox join against a literal-broadcast relation of the part boxes (see
+    ``build_blocks_pre``), each part polygonizes independently, then the block
+    IDs are assigned by a region-wide window (georank = cumcount within
+    (region, geohash) ordered by canonical WKB — the reference's sort+cumcount
+    at blocker.py:296-322, bit-identical to the r1 per-region kernel output)."""
+    return assign_block_ids(build_blocks_pre(land, lines))
 
 
-# Above this many land parts the literal-broadcast line→part routing (a
-# driver collect + literal relation) stops being "tiny metadata": an
-# archipelago world (Indonesia/Norway at 100×) has 10⁴-10⁵ parts and the
-# collected rows bloat the plan. The cell-key equi-join route takes over
-# (VERDICT r3 #3). 8192 rows × 6 scalars ≈ 400 KB literal — comfortably
-# below Spark's plan-size pain threshold; both paths are block-identical
-# (tested on a ≥10⁴-part region).
-PART_BROADCAST_MAX = 8192
-ROUTE_RES = 7  # ~2.8° routing tiles; with_cover_cells lowers per-row for giants
-
-
-def _route_lines_to_parts_cells(land: DataFrame, lines: DataFrame) -> DataFrame:
-    """Scale-safe line→part routing: cover both bboxes with equal-area cells
-    and equi-join on (region, cell) — no driver-side part state. Same output
-    rows as the broadcast-bbox path: (l_region, l_part, l_geometry), one row
-    per (line, bbox-overlapping part)."""
-    from ..functions import cellexpr
-
-    part_cells = cellexpr.with_cover_cells(
-        land.select(
-            F.col("region_code").alias("p_region"), F.col("part_id").alias("p_part"),
-            F.col("minx").alias("p_minx"), F.col("miny").alias("p_miny"),
-            F.col("maxx").alias("p_maxx"), F.col("maxy").alias("p_maxy"),
-        ),
-        ROUTE_RES,
-        minx="p_minx", miny="p_miny", maxx="p_maxx", maxy="p_maxy",
-    )
-    res_list = sorted(
-        r["cell_res"] for r in part_cells.select("cell_res").distinct().collect()
-    )
-    if not res_list:  # no land parts → no routed lines
-        return lines.select(
-            F.col("region_code").alias("l_region"),
-            F.lit(None).cast("int").alias("l_part"),
-            F.col("geometry").alias("l_geometry"),
-        ).limit(0)
-    l = lines.select("region_code", "geometry", "minx", "miny", "maxx", "maxy").withColumn(
-        "_lid", F.monotonically_increasing_id()
-    )
-    line_cells = None
-    for r in res_list:
-        lc = cellexpr.with_cover_cells(l, r, target=None).select(
-            "region_code", "_lid", "geometry", "minx", "miny", "maxx", "maxy", "cell"
-        )
-        line_cells = lc if line_cells is None else line_cells.unionByName(lc)
-    return (
-        line_cells.join(
-            part_cells.select("p_region", "p_part", "p_minx", "p_miny", "p_maxx", "p_maxy", "cell"),
-            (F.col("region_code") == F.col("p_region")) & (line_cells["cell"] == part_cells["cell"]),
-        )
-        .filter(
-            (F.col("minx") <= F.col("p_maxx")) & (F.col("maxx") >= F.col("p_minx"))
-            & (F.col("miny") <= F.col("p_maxy")) & (F.col("maxy") >= F.col("p_miny"))
-        )
-        .select(
-            F.col("region_code").alias("l_region"),
-            F.col("p_part").alias("l_part"),
-            F.col("_lid"),
-            F.col("geometry").alias("l_geometry"),
-        )
-        .dropDuplicates(["l_region", "l_part", "_lid"])
-        .drop("_lid")
-    )
-
-
-def build_blocks_pre(land: DataFrame, lines: DataFrame,
-                     route: str = "auto") -> DataFrame:
+def build_blocks_pre(land: DataFrame, lines: DataFrame) -> DataFrame:
     """The cogroup half of build_blocks: blocks WITHOUT ids (geohash + geometry
     + stats). Exposed so stage-level profiling/benchmarks can attribute time
     between the geometry kernels and the id window.
 
-    ``route``: how lines reach their land parts — ``"broadcast"`` (driver
-    literal of part bboxes; fastest when parts are few), ``"cells"``
-    (distributed cell-key equi-join; no driver state, the 100 TB shape), or
-    ``"auto"`` (broadcast up to ``PART_BROADCAST_MAX`` parts, cells above)."""
+    Lines reach their land parts through one driver collect of the part boxes
+    (no geometry), re-broadcast as a literal relation and joined on region
+    plus closed-bbox overlap; a line crossing several parts is clipped in
+    each. The same collect sizes the cogroup's partition count."""
     if "minx" not in land.columns:
         # externally-sourced land without bbox columns: one Arrow pass. The
         # normalize stage emits them in-kernel, so the pipeline path never
@@ -604,54 +537,34 @@ def build_blocks_pre(land: DataFrame, lines: DataFrame,
         "region_code", F.col("part_id").cast("int").alias("part_id"),
         "geometry", "minx", "miny", "maxx", "maxy",
     )
-    pb_rows = None
-    if route == "auto":
-        # the auto probe IS the broadcast path's collect, just capped: pull
-        # at most MAX+1 part-box rows (no geometry). ≤ MAX rows → we already
-        # hold the full literal relation (zero extra jobs vs plain
-        # broadcast); > MAX → archipelago, switch to the cell route.
-        probe = land.select(
-            "region_code", "part_id", "minx", "miny", "maxx", "maxy"
-        ).limit(PART_BROADCAST_MAX + 1).collect()
-        if len(probe) <= PART_BROADCAST_MAX:
-            route, pb_rows = "broadcast", probe
-        else:
-            route = "cells"
-    if route == "cells":
-        lines_parts = _route_lines_to_parts_cells(land, lines)
-    elif route == "broadcast":
-        # materialize the part-bbox dim table driver-side before broadcasting:
-        # it has one row per land part (tiny under PART_BROADCAST_MAX — the
-        # same rows a BroadcastExchange would collect anyway), and
-        # broadcasting a subtree that contains Python-eval stages makes Spark
-        # re-execute that lineage on every query run (measured 7-13s per
-        # execution at 32 cores vs 0.5s for the literal relation)
-        spark = land.sparkSession
-        if pb_rows is None:
-            pb_rows = land.select(
-                "region_code", "part_id", "minx", "miny", "maxx", "maxy"
-            ).collect()
-        part_boxes = F.broadcast(
-            spark.createDataFrame(
-                [tuple(r) for r in pb_rows],
-                "p_region string, p_part int, p_minx double, p_miny double, p_maxx double, p_maxy double",
-            )
+    # materialize the part-bbox dim table driver-side before broadcasting: it
+    # has one row per land part (the same rows a BroadcastExchange would
+    # collect anyway), and broadcasting a subtree that contains Python-eval
+    # stages makes Spark re-execute that lineage on every query run (measured
+    # 7-13s per execution at 32 cores vs 0.5s for the literal relation).
+    pb_rows = land.select(
+        "region_code", "part_id", "minx", "miny", "maxx", "maxy"
+    ).collect()
+    spark = land.sparkSession
+    part_boxes = F.broadcast(
+        spark.createDataFrame(
+            [tuple(r) for r in pb_rows],
+            "p_region string, p_part int, p_minx double, p_miny double, p_maxx double, p_maxy double",
         )
-        lines_parts = (
-            lines.select("region_code", "geometry", "minx", "miny", "maxx", "maxy")
-            .join(part_boxes, F.col("region_code") == F.col("p_region"), "inner")
-            .filter(
-                (F.col("minx") <= F.col("p_maxx")) & (F.col("maxx") >= F.col("p_minx"))
-                & (F.col("miny") <= F.col("p_maxy")) & (F.col("maxy") >= F.col("p_miny"))
-            )
-            .select(
-                F.col("region_code").alias("l_region"),
-                F.col("p_part").alias("l_part"),
-                F.col("geometry").alias("l_geometry"),
-            )
+    )
+    lines_parts = (
+        lines.select("region_code", "geometry", "minx", "miny", "maxx", "maxy")
+        .join(part_boxes, F.col("region_code") == F.col("p_region"), "inner")
+        .filter(
+            (F.col("minx") <= F.col("p_maxx")) & (F.col("maxx") >= F.col("p_minx"))
+            & (F.col("miny") <= F.col("p_maxy")) & (F.col("maxy") >= F.col("p_miny"))
         )
-    else:
-        raise ValueError(f"unknown route {route!r} (auto|broadcast|cells)")
+        .select(
+            F.col("region_code").alias("l_region"),
+            F.col("p_part").alias("l_part"),
+            F.col("geometry").alias("l_geometry"),
+        )
+    )
     # Wide EXPLICIT repartition on the group keys before the cogroup: the
     # kernel stage is tiny-bytes/huge-CPU, so it needs far more partitions
     # than a byte-sized shuffle would get — 16× parallelism cuts the
@@ -662,23 +575,20 @@ def build_blocks_pre(land: DataFrame, lines: DataFrame,
     # world: 8-core cogroup 36.4s → 28.2s, 32-core → 13.9s, and 8→32
     # efficiency 0.25 → 0.51 (round 3).
     #
-    # Round 4: the overscan is sized to the KNOWN part count when the auto
-    # probe already fetched it — every Python task pays a measured
-    # ~0.2-0.25 s runner floor even when its partition is empty, so 512
-    # tasks for 48 groups burned ~2 s of pure overhead at the driver config.
-    # 2× groups keeps the straggler-tail benefit; the 16× ceiling returns
-    # as soon as groups ≥ 8× parallelism (the scaling worlds).
-    dp = land.sparkSession.sparkContext.defaultParallelism
-    if pb_rows is not None:
-        np_ = min(dp * 16, max(dp * 2, 2 * len(pb_rows)))
-    else:
-        np_ = dp * 16
+    # Round 4: the overscan is sized to the KNOWN part count from the
+    # part-box collect — every Python task pays a measured ~0.2-0.25 s
+    # runner floor even when its partition is empty, so 512 tasks for 48
+    # groups burned ~2 s of pure overhead at the driver config. 2× groups
+    # keeps the straggler-tail benefit; the 16× ceiling returns as soon as
+    # groups ≥ 8× parallelism (the scaling worlds).
+    dp = spark.sparkContext.defaultParallelism
+    np_ = min(dp * 16, max(dp * 2, 2 * len(pb_rows)))
     land_g = land.repartition(np_, "region_code", "part_id")
     lines_g = lines_parts.repartition(np_, "l_region", "l_part")
     raw = (
         land_g.groupBy("region_code", "part_id")
         .cogroup(lines_g.groupBy("l_region", "l_part"))
-        .applyInPandas(_block_cogroup_adapter, BLOCKS_RAW_SCHEMA)
+        .applyInPandas(_block_cogroup, BLOCKS_RAW_SCHEMA)
     )
     # flat per-block post-processing on dp partitions: the round-robin
     # repartition decouples its parallelism from the group count (the
@@ -714,9 +624,3 @@ def assign_block_ids(pre: DataFrame) -> DataFrame:
             "minx", "miny", "maxx", "maxy",
         )
     )
-
-
-def _block_cogroup_adapter(land_pdf: pd.DataFrame, lines_pdf: pd.DataFrame) -> pd.DataFrame:
-    if len(lines_pdf):
-        lines_pdf = lines_pdf.rename(columns={"l_geometry": "geometry"})
-    return _block_cogroup(land_pdf, lines_pdf)

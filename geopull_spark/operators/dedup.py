@@ -376,8 +376,7 @@ def simhash_bucket_stats(docs: DataFrame, text_col: str = "text",
 
 
 def connected_components(pairs: DataFrame, src: str = "doc_a", dst: str = "doc_b",
-                         max_iters: int = 50, shortcut: bool = True,
-                         stats: dict | None = None) -> DataFrame:
+                         max_iters: int = 50, stats: dict | None = None) -> DataFrame:
     """Connected components over a candidate-pair graph → (node, component)
     where component = min node id in the component.
 
@@ -388,14 +387,12 @@ def connected_components(pairs: DataFrame, src: str = "doc_a", dst: str = "doc_b
     check; no per-row Python.
 
     Each round does min-label propagation — label(v) ← min(label(v), min over
-    neighbors' labels) — and, with ``shortcut=True`` (default), a pointer-
-    doubling hop label(v) ← label(label(v)). Labels start at self and only
-    decrease, and label(u) ≤ u always, so the shortcut is monotone-safe; it
-    collapses chains in O(log n) rounds where plain propagation needs
-    O(diameter) — a 10⁶-node path of chained near-dups (adversarial but real
-    in crawl data) converges in ~20 rounds instead of 10⁶. Cost: one extra
-    self-join per round; worth it except on provably-shallow graphs
-    (``shortcut=False`` restores the one-join round).
+    neighbors' labels) — then a pointer-doubling hop label(v) ←
+    label(label(v)). Labels start at self and only decrease, and label(u) ≤ u
+    always, so the hop is monotone-safe; it collapses chains in O(log n)
+    rounds where plain propagation needs O(diameter) — a 10⁶-node path of
+    chained near-dups (adversarial but real in crawl data) converges in ~20
+    rounds instead of 10⁶, for one extra self-join per round.
 
     ``stats``: optional dict; on return ``stats["iterations"]`` holds the
     number of rounds executed (for convergence tests / telemetry)."""
@@ -424,30 +421,29 @@ def connected_components(pairs: DataFrame, src: str = "doc_a", dst: str = "doc_b
                 (F.col("nbr_component") < F.col("component")).alias("_changed"),
             )
         )
-        if shortcut:
-            # pointer doubling: follow the label one extra hop THROUGH THE
-            # JUST-UPDATED labels — label(v) ← updated_label(updated_label(v)).
-            # Hopping through the pre-round labels would only gain a constant
-            # per round; through the updated ones the reach doubles
-            # (d_{k+1} ≥ 2·d_k), giving O(log n) convergence on chains.
-            # component' = label(component) ≤ component (labels start at self
-            # and only decrease), so _changed stays monotone-true.
-            updated = updated.localCheckpoint()
-            lab2 = updated.select(
-                F.col("node").alias("p_node"), F.col("component").alias("p_component")
+        # pointer doubling: follow the label one extra hop THROUGH THE
+        # JUST-UPDATED labels — label(v) ← updated_label(updated_label(v)).
+        # Hopping through the pre-round labels would only gain a constant
+        # per round; through the updated ones the reach doubles
+        # (d_{k+1} ≥ 2·d_k), giving O(log n) convergence on chains.
+        # component' = label(component) ≤ component (labels start at self
+        # and only decrease), so _changed stays monotone-true.
+        updated = updated.localCheckpoint()
+        lab2 = updated.select(
+            F.col("node").alias("p_node"), F.col("component").alias("p_component")
+        )
+        updated = (
+            updated.join(lab2, updated["component"] == lab2["p_node"], "left")
+            .select(
+                "node",
+                F.least(
+                    F.col("component"),
+                    F.coalesce(F.col("p_component"), F.col("component")),
+                ).alias("component2"),
+                (F.col("_changed") | (F.col("p_component") < F.col("component"))).alias("_changed"),
             )
-            updated = (
-                updated.join(lab2, updated["component"] == lab2["p_node"], "left")
-                .select(
-                    "node",
-                    F.least(
-                        F.col("component"),
-                        F.coalesce(F.col("p_component"), F.col("component")),
-                    ).alias("component2"),
-                    (F.col("_changed") | (F.col("p_component") < F.col("component"))).alias("_changed"),
-                )
-                .withColumnRenamed("component2", "component")
-            )
+            .withColumnRenamed("component2", "component")
+        )
         updated = updated.localCheckpoint()
         n_changed = updated.filter(F.col("_changed")).count()
         labels = updated.drop("_changed")

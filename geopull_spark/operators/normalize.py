@@ -95,19 +95,6 @@ def choose_levels(admin_num: DataFrame) -> DataFrame:
     return pivoted
 
 
-def _dissolve_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    region = pdf["region_code"].iloc[0]
-    parts = _overlay.dissolve([bytes(b) for b in pdf["geometry"]])
-    return pd.DataFrame(_part_rows(region, parts), columns=_LAND_COLS)
-
-
-def dissolve_by_region(df: DataFrame) -> DataFrame:
-    """A2 grouped geometric union via applyInPandas."""
-    return df.select("region_code", "geometry").groupBy("region_code").applyInPandas(
-        _dissolve_group, LAND_SCHEMA
-    )
-
-
 def _difference_cogroup(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
     """Per-region overlay difference: land parts minus (dissolved) right side.
 

@@ -2,11 +2,11 @@
 plan variant forks the frozen outputs.
 
 Runs at sf0.001 (fast, CI-style):
-  1. full pipeline → blocks (broadcast + cells line routing)
+  1. full pipeline → blocks, built once
   2. doc→block assignment via THREE variants: the cogroup plan,
      cogroup+salt_k=4, and the streaming AvailableNow path
   3. compares md5 fingerprints of the sorted output rows against the frozen
-     hashes below (and each variant against the others)
+     hashes below (and each assignment variant against the others)
 
 Exit 0 = all variants byte-identical and equal to the frozen snapshot.
 Exit 1 = drift (prints which variant and which hash).
@@ -63,20 +63,11 @@ def main() -> int:
     failures = []
     results: dict[str, str] = {}
 
-    # -- blocks via both line-routing paths --------------------------------
-    block_hashes = {}
-    blocks_ref = None
-    for route in ("broadcast", "cells"):
-        blocks = blocker.build_blocks(land, lines, route=route)
-        rows = [(r["block_id"], bytes(r["geometry"]).hex())
-                for r in blocks.select("block_id", "geometry").collect()]
-        block_hashes[route] = _md5(rows)
-        if route == "broadcast":
-            blocks_ref = blocks.cache()
-            blocks_ref.count()
-    if len(set(block_hashes.values())) != 1:
-        failures.append(f"blocks routes diverge: {block_hashes}")
-    results["blocks"] = block_hashes["broadcast"]
+    # -- blocks ------------------------------------------------------------
+    blocks_ref = blocker.build_blocks(land, lines).cache()
+    rows = [(r["block_id"], bytes(r["geometry"]).hex())
+            for r in blocks_ref.select("block_id", "geometry").collect()]
+    results["blocks"] = _md5(rows)
 
     # -- assignment via every plan variant ---------------------------------
     docs = synth.interleaved_documents(spark, SF).select("doc_id", "lon", "lat").cache()

@@ -5,7 +5,7 @@
 #   scripts/submit_bench.sh [cpus]
 set -euo pipefail
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
-CPUS="${1:-${SPARK_GRAFT_CPUS:-32}}"
+CPUS="${1:-${SPARK_GRAFT_CPUS:-$(nproc)}}"
 ZIP="$(mktemp -d)/geopull_spark.zip"
 (cd "$REPO" && python -c "
 import shutil, sys
