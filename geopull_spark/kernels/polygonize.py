@@ -11,6 +11,13 @@ All coordinates are quantized to an integer snap grid (1e-9 deg) so vertex
 identity is exact; intersection points are computed in float64 then snapped.
 Runs inside ``applyInPandas`` groups keyed by region (matching the
 reference's per-country polygonize semantics, ``orchestrator.py:87-91``).
+
+Noding works on whole arrays, not per grid cell or per split point:
+candidate pairs come from sorting segments by grid cell and building every
+within-cell pair with one repeat/cumsum index construction, and split
+points are collected as (segment, point) rows, ordered along each segment
+with ``np.lexsort`` and chained in one pass. The face walk stays a Python
+loop; the signed areas that classify its rings are one batched sum.
 """
 
 from __future__ import annotations
@@ -18,7 +25,7 @@ from __future__ import annotations
 import numpy as np
 
 from . import wkb
-from .area import ring_signed_area
+from .area import ring_signed_areas
 
 SNAP = 1e-9
 _Q = 1.0 / SNAP
@@ -70,6 +77,18 @@ def geoms_to_segments(geoms) -> np.ndarray:
     if not segs:
         return np.zeros((0, 4), dtype=np.float64)
     return np.vstack(segs)
+
+
+def batch_segments(batch: wkb.GeomBatch) -> np.ndarray:
+    """``geoms_to_segments`` over a flat batch: every pair of consecutive
+    coordinates within a ring, in batch order (Point parts add none)."""
+    c = batch.coords
+    if len(c) < 2:
+        return np.zeros((0, 4), dtype=np.float64)
+    ok = np.ones(len(c) - 1, dtype=bool)
+    cut = batch.ring_offsets[1:-1] - 1  # a ring's last vertex starts no segment
+    ok[cut[(cut >= 0) & (cut < len(ok))]] = False
+    return np.column_stack([c[:-1][ok], c[1:][ok]])
 
 
 def _pack_points(pts: np.ndarray) -> np.ndarray | None:
@@ -184,31 +203,36 @@ def _candidate_pairs(q: np.ndarray, max_pairs: int = 50_000_000) -> np.ndarray:
     bin_ids = (np.repeat(bx0, counts_per_seg) + k % wr) * ny + (
         np.repeat(by0, counts_per_seg) + k // wr
     )
+    # stable sort keeps each bin's segment ids ascending, so every
+    # within-bin pair (position a < position b) already has i < j
     order = np.argsort(bin_ids, kind="stable")
     seg_ids, bin_ids = seg_ids[order], bin_ids[order]
     starts = np.flatnonzero(np.diff(bin_ids, prepend=bin_ids[0] - 1))
     counts = np.diff(np.append(starts, len(bin_ids)))
-    pairs = []
-    total = 0
-    for s, c in zip(starts, counts):
-        if c < 2:
-            continue
-        ids = np.sort(seg_ids[s : s + c])
-        ii, jj = np.triu_indices(c, k=1)
-        total += len(ii)
-        if total > max_pairs:
-            raise MemoryError("noding candidate pairs exceed cap")
-        pairs.append(np.column_stack([ids[ii], ids[jj]]))
-    if not pairs:
+    if int((counts * (counts - 1) // 2).sum()) > max_pairs:
+        raise MemoryError("noding candidate pairs exceed cap")
+    # element at position a of a bin of c pairs with the c-1-a after it
+    pos = np.arange(len(seg_ids)) - np.repeat(starts, counts)
+    partners = np.repeat(counts, counts) - 1 - pos
+    if partners.sum() == 0:
         return np.zeros((0, 2), dtype=np.int64)
-    pairs = unique_points(np.vstack(pairs))  # packed-key unique
-    # bbox overlap filter
-    i, j = pairs[:, 0], pairs[:, 1]
+    src = np.repeat(np.arange(len(seg_ids)), partners)
+    first = np.cumsum(partners) - partners
+    dst = src + 1 + np.arange(len(src)) - np.repeat(first, partners)
+    i, j = seg_ids[src], seg_ids[dst]
+    # keep a pair only in the first cell both segments cover (so it is
+    # emitted once) and only if the bboxes overlap; then sort (i, j)
+    b = bin_ids[src]
     ok = (
-        (minx[i] <= maxx[j]) & (maxx[i] >= minx[j])
+        (b // ny == np.maximum(bx0[i], bx0[j])) & (b % ny == np.maximum(by0[i], by0[j]))
+        & (minx[i] <= maxx[j]) & (maxx[i] >= minx[j])
         & (miny[i] <= maxy[j]) & (maxy[i] >= miny[j])
     )
-    return pairs[ok]
+    pairs = np.column_stack([i[ok], j[ok]])
+    keys = _pack_points(pairs)
+    if keys is None:
+        return pairs[np.lexsort((pairs[:, 1], pairs[:, 0]))]
+    return pairs[np.argsort(keys, kind="stable")]
 
 
 def node_segments(segments: np.ndarray, max_rounds: int = 3) -> np.ndarray:
@@ -232,10 +256,11 @@ def _node_round(q: np.ndarray) -> tuple[np.ndarray, bool]:
         return q, False
     f = q.astype(np.float64)
     i, j = pairs[:, 0], pairs[:, 1]
-    p = f[i, 0:2]
-    r = f[i, 2:4] - p
-    s0 = f[j, 0:2]
-    s = f[j, 2:4] - s0
+    fi, fj = f[i], f[j]
+    p = fi[:, 0:2]
+    r = fi[:, 2:4] - p
+    s0 = fj[:, 0:2]
+    s = fj[:, 2:4] - s0
     denom = r[:, 0] * s[:, 1] - r[:, 1] * s[:, 0]
     qp = s0 - p
     with np.errstate(divide="ignore", invalid="ignore"):
@@ -244,50 +269,59 @@ def _node_round(q: np.ndarray) -> tuple[np.ndarray, bool]:
     eps = 1e-12
     proper = (np.abs(denom) > eps) & (t > eps) & (t < 1 - eps) & (u > eps) & (u < 1 - eps)
 
-    # split points: seg_index -> list of quantized points
-    split_pts: dict[int, list] = {}
-
-    def add_split(seg_idx_arr, pts_q):
-        for k in range(len(seg_idx_arr)):
-            split_pts.setdefault(int(seg_idx_arr[k]), []).append(pts_q[k])
-
+    # split points as (segment, x, y) rows
+    seg_parts, pt_parts = [], []
     if proper.any():
         ip = p[proper] + t[proper, None] * r[proper]
         ipq = np.round(ip).astype(np.int64)
-        add_split(i[proper], ipq)
-        add_split(j[proper], ipq)
+        seg_parts += [i[proper], j[proper]]
+        pt_parts += [ipq, ipq]
 
     # T-junctions: endpoint of one segment interior to the other
-    for (src, dst) in ((j, i), (i, j)):
+    for (src, f_src, dst, f_dst) in ((j, fj, i, fi), (i, fi, j, fj)):
+        a = f_dst[:, 0:2]
+        ab = f_dst[:, 2:4] - a
+        ab_len2 = np.einsum("ij,ij->i", ab, ab)
+        near = 0.75 * np.sqrt(ab_len2)
+        div = np.maximum(ab_len2, 1)
         for end in (0, 2):
-            pt = f[src][:, end : end + 2]
-            a = f[dst][:, 0:2]
-            b = f[dst][:, 2:4]
-            ab = b - a
-            ap = pt - a
+            ap = f_src[:, end : end + 2] - a
             cross = ab[:, 0] * ap[:, 1] - ab[:, 1] * ap[:, 0]
-            ab_len2 = np.einsum("ij,ij->i", ab, ab)
-            tt = np.einsum("ij,ij->i", ap, ab) / np.maximum(ab_len2, 1)
+            tt = np.einsum("ij,ij->i", ap, ab) / div
             # within 0.75 quantum of the carrier line, strictly interior
-            on = (np.abs(cross) <= 0.75 * np.sqrt(ab_len2)) & (tt > eps) & (tt < 1 - eps)
+            on = (np.abs(cross) <= near) & (tt > eps) & (tt < 1 - eps)
             if on.any():
-                add_split(dst[on], q[src][on, end : end + 2])
+                seg_parts.append(dst[on])
+                pt_parts.append(q[src[on], end : end + 2])
 
-    if not split_pts:
+    if not seg_parts:
         return q, False
+    seg = np.concatenate(seg_parts)
+    pts = np.concatenate(pt_parts)
+    # distinct points per segment, then ordered along it (ties in the
+    # projection keep (x, y) order)
+    o = np.lexsort((pts[:, 1], pts[:, 0], seg))
+    seg, pts = seg[o], pts[o]
+    new = np.ones(len(seg), dtype=bool)
+    new[1:] = (seg[1:] != seg[:-1]) | np.any(pts[1:] != pts[:-1], axis=1)
+    seg, pts = seg[new], pts[new]
+    a = q[seg, 0:2]
+    d = (q[seg, 2:4] - a).astype(np.float64)
+    tv = ((pts - a) * d).sum(axis=1) / np.maximum((d * d).sum(axis=1), 1.0)
+    o = np.lexsort((tv, seg))
+    seg, pts = seg[o], pts[o]
+    # chain a → p1 → … → pk → b per split segment
+    first = np.ones(len(seg), dtype=bool)
+    first[1:] = seg[1:] != seg[:-1]
+    last = np.ones(len(seg), dtype=bool)
+    last[:-1] = first[1:]
+    prev = np.empty_like(pts)
+    prev[1:] = pts[:-1]
+    prev[first] = q[seg[first], 0:2]
+    tail = np.column_stack([pts[last], q[seg[last], 2:4]])
     keep = np.ones(n, dtype=bool)
-    new_segs = []
-    for idx, pts in split_pts.items():
-        a = q[idx, 0:2]
-        b = q[idx, 2:4]
-        pts_arr = unique_points(np.asarray(pts, dtype=np.int64))
-        d = b.astype(np.float64) - a.astype(np.float64)
-        tvals = ((pts_arr - a) @ d) / max(float(d @ d), 1.0)
-        order = np.argsort(tvals)
-        chain = np.vstack([a, pts_arr[order], b])
-        keep[idx] = False
-        new_segs.append(np.column_stack([chain[:-1], chain[1:]]))
-    q = np.vstack([q[keep]] + new_segs)
+    keep[seg] = False
+    q = np.vstack([q[keep], np.column_stack([prev, pts]), tail])
     return _dedupe_segments(q), True
 
 
@@ -380,8 +414,7 @@ def extract_faces(noded_q: np.ndarray) -> list[list[np.ndarray]]:
     nxt = sorted_ids[starts[v_of] + (rank[twin] - 1) % counts[v_of]]
 
     visited = np.zeros(m, dtype=bool)
-    rings_ccw: list[np.ndarray] = []  # vertex-id arrays (closed)
-    rings_cw: list[np.ndarray] = []
+    rings: list[np.ndarray] = []  # vertex-id arrays (closed)
     for d0 in range(m):
         if visited[d0]:
             continue
@@ -392,19 +425,19 @@ def extract_faces(noded_q: np.ndarray) -> list[list[np.ndarray]]:
             ring_vids.append(du[d])
             d = nxt[d]
         ring_vids.append(ring_vids[0])
-        vids = np.asarray(ring_vids, dtype=np.int64)
-        a = ring_signed_area(vf[vids])
-        if a > 0:
-            rings_ccw.append(vids)
-        elif a < 0:
-            rings_cw.append(vids)
+        rings.append(np.asarray(ring_vids, dtype=np.int64))
+    offsets = np.zeros(len(rings) + 1, dtype=np.int64)
+    np.cumsum([len(r) for r in rings], out=offsets[1:])
+    areas = ring_signed_areas(vf[np.concatenate(rings)], offsets)
+    ccw = np.flatnonzero(areas > 0)
+    rings_ccw = [rings[k] for k in ccw]
+    rings_cw = [rings[k] for k in np.flatnonzero(areas < 0)]
 
     # assign each CW ring as hole of the smallest strictly-containing CCW
     # face (exact integer test; unbounded-face rings match no face → dropped)
     faces: list[list[np.ndarray]] = [[vf[vids]] for vids in rings_ccw]
     if rings_cw and rings_ccw:
-        face_areas = [ring_signed_area(f[0]) for f in faces]
-        order = np.argsort(face_areas)  # try smallest faces first
+        order = np.argsort(areas[ccw])  # try smallest faces first
         for hole_vids in rings_cw:
             hole_q = verts[hole_vids]
             for fi in order:

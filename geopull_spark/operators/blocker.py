@@ -48,14 +48,19 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..kernels import wkb as _wkb
-from ..kernels.area import geom_area_m2
+from ..kernels.area import batch_area_m2, geom_area_m2, segment_sums
 from ..kernels.cells import geohash_encode
 from ..kernels.clip import clip_segments_to_polygons
 from ..kernels.overlay import dissolve as _dissolve
 from ..kernels.overlay import make_valid as _make_valid
 from ..kernels.overlay import normalize_geom, overlay as _overlay_op
 from ..kernels.pointops import representative_point
-from ..kernels.polygonize import extract_faces, geoms_to_segments, node_segments
+from ..kernels.polygonize import (
+    batch_segments,
+    extract_faces,
+    geoms_to_segments,
+    node_segments,
+)
 
 _BBOX_FIELDS = [
     T.StructField("minx", T.DoubleType()),
@@ -119,9 +124,8 @@ def _validate(polys: list) -> list:
     return out
 
 
-def _make_blocks(land_parts: list, line_geoms: list) -> list:
+def _make_blocks(land_parts: list, line_segs: np.ndarray) -> list:
     """blocker.py:233-279."""
-    line_segs = geoms_to_segments(line_geoms)
     clipped = clip_segments_to_polygons(line_segs, land_parts)
     # enclosure: exterior rings only (blocker.py:353-366)
     enclosure_segs = geoms_to_segments(
@@ -181,37 +185,35 @@ def _remove_overlaps(blocks: list, areas: list, land_area: float) -> tuple[list,
 
 def _post_blocks_batches(batches):
     """Flat per-block post-processing (r6): raw face WKB → rep point,
-    geohash, canonical normalize, bounds. Same values as the former
-    in-kernel per-block tail — only the stage boundary moved (dumps→loads
-    of float64 WKB is exact)."""
+    geohash, canonical normalize, bounds. Each Arrow batch is decoded once
+    into a flat geometry batch (float64 WKB round-trips exactly)."""
     for pdf in batches:
         if len(pdf) == 0:
             continue
-        geoms = [_wkb.loads(bytes(b)) for b in pdf["geometry"]]
         yield _geohash_blocks_fast(
-            geoms, list(pdf["area_m2"]), list(pdf["region_code"])
+            _wkb.decode(pdf["geometry"]), list(pdf["area_m2"]), list(pdf["region_code"])
         )
 
 
 # ---------------------------------------------------------------------------
-# batched per-block post-processing (r6)
+# batched per-block post-processing
 #
-# The per-block chain (representative_point ~63 µs, _normalize_rings ~76 µs,
-# bounds ~9 µs — numpy fixed call overhead, profiled on real pipeline
-# blocks) dominates the flat post stage. The batched path below computes the
-# SAME values over all simple blocks of a batch at once. Bit-identity
-# argument, step by step:
+# Per block, the chain is representative point, canonical normalize (ring
+# orientation + rotation to the lexicographic-min vertex), WKB and bounds.
+# Called once per block, numpy's fixed call overhead dominated the post
+# stage, so the code below runs each step once per batch over the flat
+# coordinates of every simple block (one ring, ≥ 4 vertices). It computes
+# the SAME values as the per-block functions:
 #   * elementwise float ops (+,-,*,/ and comparisons) are IEEE-exact per
 #     element regardless of array shape → identical batched or not;
 #   * min/max reductions are order-insensitive bitwise → reduceat is safe;
-#   * the ONE order-sensitive reduction (the shoelace SUM inside
-#     _normalize_rings, used only for its SIGN) is computed via reduceat
-#     with an error bound: rings where |sum| could change sign under a
-#     different summation order (|a| <= n·eps·Σ|terms|) fall back to the
-#     original per-block code path;
-#   * any block that is not a simple single-ring Polygon (holes, multi
-#     parts, degenerate scanlines, sub-3-vertex rings) falls back to the
-#     original functions wholesale.
+#   * the one order-sensitive reduction, the shoelace sum whose sign picks
+#     the ring orientation, goes through ``area.segment_sums``, which
+#     reproduces np.sum's summation order bit for bit;
+#   * the rotation start, the reversal and the closing vertex are index
+#     arithmetic, and bounds are min/max reductions of the output rings.
+# Blocks that are not simple (holes, multi parts) and degenerate scanlines
+# of the representative point go through the per-block functions.
 # Pinned by tests/test_pipeline.py::test_post_blocks_batched_bit_identical.
 # ---------------------------------------------------------------------------
 
@@ -309,9 +311,8 @@ def _segment_starts(sorted_ids: np.ndarray, n_seg: int) -> np.ndarray:
 
 
 def _batched_normalize_rings(V: np.ndarray, starts: np.ndarray, lens: np.ndarray):
-    """Vectorized _normalize_rings for n concatenated CLOSED single rings.
-    Returns (rings, ok): per-ring canonical CLOSED (m,2) arrays; ok=False →
-    use the original function (ambiguous shoelace sign / tiny ring)."""
+    """``_normalize_rings`` of n concatenated single exterior rings.
+    Returns (coords, lens) of the canonical CLOSED rings, concatenated."""
     n = len(starts)
     ends = starts + lens
     # drop closing vertex where first == last (np.array_equal semantics)
@@ -323,95 +324,96 @@ def _batched_normalize_rings(V: np.ndarray, starts: np.ndarray, lens: np.ndarray
     b_starts = np.concatenate([[0], np.cumsum(body_lens)[:-1]])
     b_ids = np.repeat(np.arange(n), body_lens)
     # dedupe consecutive duplicates (within each body)
-    is_start = np.zeros(len(B), dtype=bool)
-    is_start[b_starts] = True
-    diff_prev = np.empty(len(B), dtype=bool)
-    diff_prev[0] = True
-    diff_prev[1:] = (B[1:, 0] != B[:-1, 0]) | (B[1:, 1] != B[:-1, 1])
-    keep2 = is_start | diff_prev
+    keep2 = np.empty(len(B), dtype=bool)
+    keep2[0] = True
+    keep2[1:] = (B[1:, 0] != B[:-1, 0]) | (B[1:, 1] != B[:-1, 1])
+    keep2[b_starts] = True
     B2 = B[keep2]
     d_ids = b_ids[keep2]
     d_lens = np.bincount(d_ids, minlength=n)
     d_starts = np.concatenate([[0], np.cumsum(d_lens)[:-1]])
     d_ends = d_starts + d_lens
-    ok = d_lens >= 3
     # shoelace over the closed ring: term_i = x_i*y_{i+1} - x_{i+1}*y_i with
     # wraparound (the original appends body[0] and sums x[:-1]y[1:]-x[1:]y[:-1])
     nx = np.arange(len(B2)) + 1
     nx[d_ends - 1] = d_starts  # wrap: successor of the last vertex is the first
     t = B2[:, 0] * B2[nx, 1] - B2[nx, 0] * B2[:, 1]
-    a2 = np.add.reduceat(t, d_starts)  # == 2*area up to summation order
-    aabs = np.add.reduceat(np.abs(t), d_starts)
-    # sign-safety guard: pairwise (np.sum) and sequential (reduceat)
-    # summation agree in sign unless |sum| is within the rounding envelope
-    guard = 4.0 * np.maximum(d_lens, 2) * 2.220446049250313e-16 * aabs
-    ok &= np.abs(a2) > guard
-    flip = ~(a2 > 0.0)  # want_ccw for an exterior ring
-    out = []
-    for i in range(n):
-        if not ok[i]:
-            out.append(None)
-            continue
-        body = B2[d_starts[i]:d_ends[i]]
-        if flip[i]:
-            body = body[::-1]
-        # first lexicographic-min vertex (np.lexsort((y, x))[0] semantics)
-        minx = body[:, 0].min()
-        cand = body[:, 0] == minx
-        miny = body[cand, 1].min()
-        start = int(np.flatnonzero(cand & (body[:, 1] == miny))[0])
-        body = np.roll(body, -start, axis=0)
-        out.append(np.vstack([body, body[0]]))
-    return out, ok
+    flip = ~(0.5 * segment_sums(t, d_starts, d_lens) > 0.0)  # want_ccw: exterior
+    # rotation start: first lexicographic-min vertex of the (possibly
+    # reversed) body, i.e. the last occurrence in body order when reversed
+    x, y = B2[:, 0], B2[:, 1]
+    on_x = x == np.minimum.reduceat(x, d_starts)[d_ids]
+    at_min = on_x & (y == np.minimum.reduceat(np.where(on_x, y, np.inf), d_starts)[d_ids])
+    pos = np.arange(len(B2))
+    first = np.minimum.reduceat(np.where(at_min, pos, len(B2)), d_starts)
+    last = np.maximum.reduceat(np.where(at_min, pos, -1), d_starts)
+    start = np.where(flip, d_ends - 1 - last, first - d_starts)
+    # output vertex k of ring i is body[(start + k) % len]; k = len closes it
+    out_lens = d_lens + 1
+    o_ids = np.repeat(np.arange(n), out_lens)
+    k = np.arange(int(out_lens.sum())) - np.repeat(np.cumsum(out_lens) - out_lens, out_lens)
+    m = d_lens[o_ids]
+    kk = (start[o_ids] + k) % m
+    src = d_starts[o_ids] + np.where(flip[o_ids], m - 1 - kk, kk)
+    return B2[src], out_lens
 
 
-def _geohash_blocks_fast(blocks: list, areas: list, regions: list,
+def _polygon_batch(coords: np.ndarray, ring_lens: np.ndarray) -> _wkb.GeomBatch:
+    """Flat batch of single-ring Polygons."""
+    n = len(ring_lens)
+    ones = np.arange(n + 1, dtype=np.int64)
+    three = np.full(n, 3, dtype=np.int64)
+    roff = np.concatenate([[0], np.cumsum(ring_lens)])
+    return _wkb.GeomBatch(three, ones, three, ones, roff, coords)
+
+
+def _geohash_blocks_fast(blocks, areas: list, regions: list,
                          precision: int = 12) -> pd.DataFrame:
-    """Per-block rep point, geohash, canonical normalize and bounds —
-    vectorized over every simple single-ring Polygon; everything else
-    (holes, multi parts, degenerate cases) routes through the per-block
-    functions. Bit-identical to the per-block reference in
+    """Per-block rep point, geohash, canonical normalize, WKB and bounds
+    over a flat batch (``blocks`` may also be a list of tuple geometries).
+    Vectorized over every simple single-ring Polygon; everything else
+    (holes, multi parts, degenerate scanlines) routes through the
+    per-block functions. Bit-identical to the per-block reference in
     tests/test_pipeline.py (``test_post_blocks_batched_bit_identical``)."""
-    n = len(blocks)
+    batch = blocks if isinstance(blocks, _wkb.GeomBatch) else _wkb.from_geoms(blocks)
+    n = len(batch)
     if n == 0:
         return pd.DataFrame(columns=BLOCKS_PRE_SCHEMA.fieldNames())
-    simple = np.array(
-        [b[0] == "Polygon" and len(b[1]) == 1 and len(b[1][0]) >= 4 for b in blocks]
-    )
+    types, goff, _, poff, roff, coords = batch
+    ring0 = poff[goff[:-1]]
+    lens = roff[ring0 + 1] - roff[ring0]
+    simple = (types == 3) & (poff[goff[:-1] + 1] - ring0 == 1) & (lens >= 4)
     rep_x = np.empty(n)
     rep_y = np.empty(n)
-    geo_out: list = [None] * n
-    if simple.any():
-        s_idx = np.flatnonzero(simple)
-        rings = [np.asarray(blocks[i][1][0], dtype=np.float64) for i in s_idx]
-        lens = np.array([len(r) for r in rings], dtype=np.int64)
-        V = np.vstack(rings)
-        starts = np.concatenate([[0], np.cumsum(lens)[:-1]])
-        bx, by, r_ok = _batched_rep_points(V, starts, lens)
-        norm_rings, n_ok = _batched_normalize_rings(V, starts, lens)
-        for j, i in enumerate(s_idx):
-            if r_ok[j]:
-                rep_x[i], rep_y[i] = bx[j], by[j]
-            else:
-                rep_x[i], rep_y[i] = representative_point(blocks[i][1])
-            if n_ok[j]:
-                geo_out[i] = ("Polygon", [norm_rings[j]])
-            else:
-                geo_out[i] = normalize_geom(blocks[i])
-    for i in np.flatnonzero(~simple):
-        rep_x[i], rep_y[i] = representative_point(blocks[i][1])
-        geo_out[i] = normalize_geom(blocks[i])
+    wkbs = np.empty(n, dtype=object)
+    bounds = np.empty((n, 4))
+    s_idx = np.flatnonzero(simple)
+    if len(s_idx):
+        lens = lens[s_idx]
+        starts = roff[ring0[s_idx]]
+        new_starts = np.cumsum(lens) - lens
+        V = coords[np.repeat(starts - new_starts, lens) + np.arange(int(lens.sum()))]
+        bx, by, r_ok = _batched_rep_points(V, new_starts, lens)
+        rep_x[s_idx], rep_y[s_idx] = bx, by
+        for i in s_idx[~r_ok]:
+            rep_x[i], rep_y[i] = representative_point(_wkb.geom_at(batch, i)[1])
+        norm = _polygon_batch(*_batched_normalize_rings(V, new_starts, lens))
+        wkbs[s_idx] = _wkb.encode(norm)
+        bounds[s_idx] = _wkb.batch_bounds(norm)
+    o_idx = np.flatnonzero(~simple)
+    if len(o_idx):
+        others = [_wkb.geom_at(batch, i) for i in o_idx]
+        for i, g in zip(o_idx, others):
+            rep_x[i], rep_y[i] = representative_point(g[1])
+        norm = _wkb.from_geoms([normalize_geom(g) for g in others])
+        wkbs[o_idx] = _wkb.encode(norm)
+        bounds[o_idx] = _wkb.batch_bounds(norm)
     ghs = geohash_encode(rep_y, rep_x, precision)
-    wkbs = [_wkb.dumps(g) for g in geo_out]
-    # bounds: min/max per ring over all rings of the normalized geometry
-    # (order-insensitive → batched reduceat is exact); the normalized
-    # vertex SET equals the input's, so bounds match _wkb.bounds(norm)
-    bounds = np.array([_wkb.bounds(g) for g in geo_out])
     return pd.DataFrame(
         {
             "region_code": regions,
             "geohash": ghs,
-            "geometry": wkbs,
+            "geometry": list(wkbs),
             "area_m2": areas,
             "rep_lon": rep_x,
             "rep_lat": rep_y,
@@ -433,19 +435,21 @@ def _block_cogroup(land_pdf: pd.DataFrame, lines_pdf: pd.DataFrame) -> pd.DataFr
         for p in _wkb.get_parts(_wkb.loads(bytes(buf))):
             if p[0] == "Polygon":
                 land_parts.append(p)
-    line_geoms = [_wkb.loads(bytes(b)) for b in lines_pdf["l_geometry"]] if len(lines_pdf) else []
+    line_segs = batch_segments(
+        _wkb.decode(lines_pdf["l_geometry"] if len(lines_pdf) else []))
 
-    blocks = _make_blocks(land_parts, line_geoms)
+    blocks = _make_blocks(land_parts, line_segs)
     # no _validate here: extract_faces emits simple rings by construction
     # (pinch points split by the angular walk), and the reference's
     # make_valid (blocker.py:281-294) is the identity on valid polygons
-    areas = [geom_area_m2(b) for b in blocks]
+    batch = _wkb.from_geoms(blocks)
+    areas = batch_area_m2(batch).tolist()
 
     # _add_back_water_features (blocker.py:202-231): polygonize filled the
     # water cutouts (holes in land parts); clip those faces back to land.
     # Only blocks whose bbox intersects a hole bbox can need clipping —
     # everything else is already inside land (hole-bbox prefilter).
-    land_area = sum(geom_area_m2(p) for p in land_parts)
+    land_area = sum(batch_area_m2(_wkb.from_geoms(land_parts)).tolist())
     if sum(areas) - land_area > 1.0:
         hole_boxes = []
         for _, rings in land_parts:
@@ -455,8 +459,7 @@ def _block_cogroup(land_pdf: pd.DataFrame, lines_pdf: pd.DataFrame) -> pd.DataFr
                     (h[:, 0].min(), h[:, 1].min(), h[:, 0].max(), h[:, 1].max())
                 )
         new_blocks, new_areas = [], []
-        for b, a in zip(blocks, areas):
-            bb = _wkb.bounds(b)
+        for b, a, bb in zip(blocks, areas, _wkb.batch_bounds(batch).tolist()):
             touches_hole = any(
                 bb[0] <= hx1 and bb[2] >= hx0 and bb[1] <= hy1 and bb[3] >= hy0
                 for hx0, hy0, hx1, hy1 in hole_boxes
@@ -485,7 +488,7 @@ def _block_cogroup(land_pdf: pd.DataFrame, lines_pdf: pd.DataFrame) -> pd.DataFr
     return pd.DataFrame(
         {
             "region_code": region,
-            "geometry": [_wkb.dumps(b) for b in blocks],
+            "geometry": _wkb.encode(_wkb.from_geoms(blocks)),
             "area_m2": areas,
         },
         columns=BLOCKS_RAW_SCHEMA.fieldNames(),

@@ -72,6 +72,15 @@ def get_spark(
         # R. Large shuffles already take the sort path (bypass only
         # applies at R ≤ 200), so forcing it is scale-neutral.
         .config("spark.shuffle.sort.bypassMergeThreshold", "2")
+        # pyspark 4.1 captures the Python call site of every Column operator
+        # for DataFrameQueryContext: ~24 py4j calls per operator instead of
+        # ~4. Off, a world_build op (4-core host, 6 ops each side) planned
+        # its 6 phases in 0.94 s instead of 1.49 s, with 1,515 py4j calls
+        # instead of 2,690 (extract: 0.13 s instead of 0.28 s). pyspark
+        # caches the flag per process on first use, so it must be set here,
+        # in the builder. Lost: the Python file:line in analysis errors;
+        # extra_conf can turn it back on.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")

@@ -1456,3 +1456,276 @@ def test_dp_simplify_properties():
     g2 = simplify_geom(mp, 0.05)
     assert g2[0] == "MultiPolygon" and len(g2[1]) == 1
     assert loads(dumps(g2))[0] == "MultiPolygon"
+
+
+# ---------------------------------------------------------------- flat batch
+@pytest.fixture(scope="module")
+def kernel_world():
+    """Blocks of a seeded street grid over a land square with a lake, built
+    by the blocker's own group kernel without Spark, plus the two segment
+    soups that kernel nodes (the raw lines, and the clipped lines with the
+    land enclosure)."""
+    import pandas as pd
+
+    from geopull_spark.kernels.clip import clip_segments_to_polygons
+    from geopull_spark.operators import blocker
+
+    rng = np.random.default_rng(11)
+    lake = [(0.41, 0.4), (0.6, 0.42), (0.58, 0.57), (0.43, 0.55)]
+    land = wkb.polygon(UNIT_SQ, holes=[lake])
+    lines = []
+    for k in range(1, 24):
+        x, y = k / 24 + rng.uniform(-0.01, 0.01, 2)
+        lines.append(wkb.linestring([(x, -0.05), (x + rng.uniform(-0.03, 0.03), 1.05)]))
+        lines.append(wkb.linestring([(-0.05, y), (0.5, y + rng.uniform(-0.01, 0.01)),
+                                     (1.05, y + rng.uniform(-0.03, 0.03))]))
+    lines.append(wkb.linestring([(0.0, 0.0), (1.0, 1.0)]))  # through grid nodes
+    lines.append(wkb.linestring([(0.2, 0.2), (0.23, 0.21)]))  # dangle
+    land_pdf = pd.DataFrame({"region_code": ["AAA"], "part_id": [0], "geometry": [land]})
+    lines_pdf = pd.DataFrame({"l_geometry": lines})
+    raw = blocker._block_cogroup(land_pdf, lines_pdf)
+    post = next(blocker._post_blocks_batches(iter([raw])))
+    parts = [wkb.loads(land)]
+    line_segs = polygonize.geoms_to_segments([wkb.loads(b) for b in lines])
+    clipped = clip_segments_to_polygons(line_segs, parts)
+    enclosure = polygonize.geoms_to_segments([("LineString", parts[0][1][0])])
+    soups = [line_segs, np.vstack([clipped, enclosure])]
+    return {"raw": raw, "post": post, "land": land, "lines": lines, "soups": soups}
+
+
+def _batch_fixtures():
+    import struct
+
+    sq = np.array(TWO_SQ + [TWO_SQ[0]], dtype=float)
+    hole = np.array(UNIT_SQ[::-1] + [UNIT_SQ[-1]], dtype=float) * 0.5 + 0.5
+    geoms = [
+        ("Polygon", [sq, hole]),
+        ("MultiPolygon", [[sq], [sq + 5, hole + 5]]),
+        ("GeometryCollection", [("Point", np.array([1.0, 2.0])), ("LineString", sq[:3]),
+                                ("Polygon", [sq, hole])]),
+        ("MultiPoint", [np.array([1.0, 2.0]), np.array([3.0, 4.0])]),
+        ("MultiLineString", [sq[:2], sq[1:]]),
+        ("Point", np.array([np.nan, np.nan])),  # empty point
+        ("Polygon", []),
+        ("LineString", np.zeros((0, 2))),
+        ("MultiPolygon", []),
+        ("GeometryCollection", []),
+    ]
+    bufs = [wkb.dumps(g) for g in geoms]
+    # big-endian EWKB with an SRID: parses to the little-endian encoding
+    be = b"\x00" + struct.pack(">III", 3 | 0x20000000, 4326, 2)
+    for ring in (sq, hole):
+        be += struct.pack(">I", len(ring)) + ring.astype(">f8").tobytes()
+    bufs.append(be)
+    return bufs
+
+
+def test_flat_batch_wkb_roundtrip_byte_identical(kernel_world):
+    """WKB → flat batch → WKB gives back the bytes ``dumps(loads(b))``
+    gives, for every block the blocker built (raw faces and canonical
+    output) and for every geometry type, empty ones and big-endian EWKB."""
+    blocks = [bytes(b) for b in kernel_world["raw"]["geometry"]]
+    blocks += [bytes(b) for b in kernel_world["post"]["geometry"]]
+    assert len(blocks) > 400
+    assert wkb.encode(wkb.decode(blocks)) == blocks
+    bufs = _batch_fixtures()
+    want = [wkb.dumps(wkb.loads(b)) for b in bufs]
+    assert want[:-1] == bufs[:-1] and want[-1] == bufs[0]
+    batch = wkb.decode(bufs)
+    assert wkb.encode(batch) == want
+    assert wkb.encode(wkb.from_geoms([wkb.loads(b) for b in bufs])) == want
+    assert [wkb.dumps(wkb.geom_at(batch, i)) for i in range(len(bufs))] == want
+    for i, b in enumerate(want):
+        g = wkb.loads(b)
+        if any(len(c) for c in wkb._coord_arrays(g)):
+            assert tuple(wkb.batch_bounds(batch)[i]) == pytest.approx(
+                wkb.bounds(g), nan_ok=True)
+        else:
+            assert np.isnan(wkb.batch_bounds(batch)[i]).all()
+    nested = wkb.dumps(("GeometryCollection", [("MultiPoint", [np.zeros(2)])]))
+    with pytest.raises(wkb.WKBError):
+        wkb.decode([nested])
+
+
+def test_segment_sums_match_np_sum():
+    """The batched sums reproduce np.sum bit for bit, across numpy's
+    8-lane, pairwise-split and buffer-chunk regimes."""
+    rng = np.random.default_rng(3)
+    lens = np.concatenate([np.arange(0, 300), rng.integers(0, 20_000, 12)])
+    starts = np.concatenate([[0], np.cumsum(lens)[:-1]])
+    t = rng.standard_normal(int(lens.sum())) * 10.0 ** rng.uniform(-6, 12, int(lens.sum()))
+    got = area.segment_sums(t, starts, lens)
+    want = np.array([np.sum(t[s:s + n]) for s, n in zip(starts, lens)])
+    assert np.array_equal(got, want)
+
+
+def test_batch_area_m2_bit_identical(kernel_world):
+    """Batched areas equal per-geometry ``geom_area_m2`` exactly: world
+    blocks, the holed land, every fixture type, and rings long enough for
+    numpy's pairwise split (> 128) and buffer chunks (> 8192)."""
+    t = np.linspace(0, 2 * np.pi, 20_001)
+    circle = np.column_stack([10 + np.cos(t), 50 + 0.7 * np.sin(t)])
+    circle[-1] = circle[0]
+    bufs = [bytes(b) for b in kernel_world["raw"]["geometry"]]
+    bufs += [kernel_world["land"], wkb.polygon(circle[:-1]), wkb.polygon(circle[:300])]
+    bufs += _batch_fixtures()
+    got = area.batch_area_m2(wkb.decode(bufs))
+    want = np.array([area.wkb_area_m2(b) for b in bufs])
+    assert np.array_equal(got, want)
+    assert np.array_equal(area.ring_signed_areas(circle, np.array([0, len(circle)])),
+                          [area.ring_signed_area(circle)])
+
+
+def _candidate_pairs_per_cell(q, max_pairs=50_000_000):
+    """The per-cell reference for ``polygonize._candidate_pairs``: the same
+    grid, then one ``np.triu_indices`` per occupied cell."""
+    n = len(q)
+    if n < 2:
+        return np.zeros((0, 2), dtype=np.int64)
+    minx = np.minimum(q[:, 0], q[:, 2])
+    maxx = np.maximum(q[:, 0], q[:, 2])
+    miny = np.minimum(q[:, 1], q[:, 3])
+    maxy = np.maximum(q[:, 1], q[:, 3])
+    span = max(int((maxx - minx).mean() + (maxy - miny).mean()) + 1, 1)
+    gminx, gmaxx = minx.min(), maxx.max()
+    gminy, gmaxy = miny.min(), maxy.max()
+    cell = max(span * 2, 1)
+    nx = int((gmaxx - gminx) // cell) + 1
+    ny = int((gmaxy - gminy) // cell) + 1
+    while nx * ny > 4 * n + 16:
+        cell *= 2
+        nx = int((gmaxx - gminx) // cell) + 1
+        ny = int((gmaxy - gminy) // cell) + 1
+    bins: dict = {}
+    for s in range(n):
+        for bx in range(int((minx[s] - gminx) // cell), int((maxx[s] - gminx) // cell) + 1):
+            for by in range(int((miny[s] - gminy) // cell), int((maxy[s] - gminy) // cell) + 1):
+                bins.setdefault(bx * ny + by, []).append(s)
+    pairs = []
+    total = 0
+    for key in sorted(bins):
+        ids = np.sort(np.asarray(bins[key], dtype=np.int64))
+        c = len(ids)
+        if c < 2:
+            continue
+        ii, jj = np.triu_indices(c, k=1)
+        total += len(ii)
+        if total > max_pairs:
+            raise MemoryError("noding candidate pairs exceed cap")
+        pairs.append(np.column_stack([ids[ii], ids[jj]]))
+    if not pairs:
+        return np.zeros((0, 2), dtype=np.int64)
+    pairs = np.unique(np.vstack(pairs), axis=0)
+    i, j = pairs[:, 0], pairs[:, 1]
+    ok = ((minx[i] <= maxx[j]) & (maxx[i] >= minx[j])
+          & (miny[i] <= maxy[j]) & (maxy[i] >= miny[j]))
+    return pairs[ok]
+
+
+def _node_round_dict(q):
+    """The per-split-point reference for ``polygonize._node_round``: split
+    points gathered in a dict per segment, one chain built per segment."""
+    n = len(q)
+    if n < 2:
+        return q, False
+    pairs = _candidate_pairs_per_cell(q)
+    if len(pairs) == 0:
+        return q, False
+    f = q.astype(np.float64)
+    i, j = pairs[:, 0], pairs[:, 1]
+    p, r = f[i, 0:2], f[i, 2:4] - f[i, 0:2]
+    s0, s = f[j, 0:2], f[j, 2:4] - f[j, 0:2]
+    denom = r[:, 0] * s[:, 1] - r[:, 1] * s[:, 0]
+    qp = s0 - p
+    with np.errstate(divide="ignore", invalid="ignore"):
+        t = (qp[:, 0] * s[:, 1] - qp[:, 1] * s[:, 0]) / denom
+        u = (qp[:, 0] * r[:, 1] - qp[:, 1] * r[:, 0]) / denom
+    eps = 1e-12
+    proper = (np.abs(denom) > eps) & (t > eps) & (t < 1 - eps) & (u > eps) & (u < 1 - eps)
+    split_pts: dict = {}
+
+    def add_split(seg_idx_arr, pts_q):
+        for k in range(len(seg_idx_arr)):
+            split_pts.setdefault(int(seg_idx_arr[k]), []).append(pts_q[k])
+
+    if proper.any():
+        ipq = np.round(p[proper] + t[proper, None] * r[proper]).astype(np.int64)
+        add_split(i[proper], ipq)
+        add_split(j[proper], ipq)
+    for (src, dst) in ((j, i), (i, j)):
+        for end in (0, 2):
+            pt = f[src][:, end:end + 2]
+            a, b = f[dst][:, 0:2], f[dst][:, 2:4]
+            ab, ap = b - a, pt - a
+            cross = ab[:, 0] * ap[:, 1] - ab[:, 1] * ap[:, 0]
+            ab_len2 = np.einsum("ij,ij->i", ab, ab)
+            tt = np.einsum("ij,ij->i", ap, ab) / np.maximum(ab_len2, 1)
+            on = (np.abs(cross) <= 0.75 * np.sqrt(ab_len2)) & (tt > eps) & (tt < 1 - eps)
+            if on.any():
+                add_split(dst[on], q[src][on, end:end + 2])
+    if not split_pts:
+        return q, False
+    keep = np.ones(n, dtype=bool)
+    new_segs = []
+    for idx, pts in split_pts.items():
+        a, b = q[idx, 0:2], q[idx, 2:4]
+        pts_arr = np.unique(np.asarray(pts, dtype=np.int64), axis=0)
+        d = b.astype(np.float64) - a.astype(np.float64)
+        tvals = ((pts_arr - a) @ d) / max(float(d @ d), 1.0)
+        chain = np.vstack([a, pts_arr[np.argsort(tvals)], b])
+        keep[idx] = False
+        new_segs.append(np.column_stack([chain[:-1], chain[1:]]))
+    q = np.vstack([q[keep]] + new_segs)
+    return polygonize._dedupe_segments(q), True
+
+
+def _node_segments_dict(segments, max_rounds=3):
+    q = polygonize._quant(segments.reshape(-1, 2)).reshape(-1, 4)
+    q = polygonize._dedupe_segments(q)
+    for _ in range(max_rounds):
+        q, changed = _node_round_dict(q)
+        if not changed:
+            break
+    return q
+
+
+def _quantized(segments):
+    return polygonize._dedupe_segments(
+        polygonize._quant(np.asarray(segments, dtype=float).reshape(-1, 2)).reshape(-1, 4))
+
+
+def test_candidate_pairs_match_per_cell_reference(kernel_world):
+    """One repeat/cumsum construction gives the per-cell loop's pair array:
+    on the world's soups, with every segment in one cell, with segments
+    spanning many cells, for n < 2, and at the ``max_pairs`` cap."""
+    rng = np.random.default_rng(5)
+    one_cell = [(0.0, y, 1e-6, 1e-7 - y) for y in np.linspace(0, 1e-7, 40)]  # a fan
+    short = rng.uniform(0, 1e-3, (300, 2))
+    many = np.vstack([np.column_stack([short, short + rng.uniform(0, 1e-5, (300, 2))]),
+                      [[0, 0, 1e-3, 1e-3], [0, 1e-3, 1e-3, 0], [0, 5e-4, 1e-3, 5e-4]]])
+    soups = [_quantized(s) for s in kernel_world["soups"]]
+    soups += [_quantized(one_cell), _quantized(many)]
+    for q in soups:
+        assert np.array_equal(polygonize._candidate_pairs(q), _candidate_pairs_per_cell(q))
+    for q in (np.zeros((0, 4), dtype=np.int64), soups[-1][:1]):
+        assert polygonize._candidate_pairs(q).shape == (0, 2)
+    q = soups[-2]  # one cell of 40 segments: 780 raw pairs
+    assert len(polygonize._candidate_pairs(q, max_pairs=780)) == 780
+    for fn in (polygonize._candidate_pairs, _candidate_pairs_per_cell):
+        with pytest.raises(MemoryError):
+            fn(q, max_pairs=779)
+
+
+def test_node_segments_match_dict_reference(kernel_world):
+    """Split points gathered as arrays node every soup exactly as the
+    per-point dict did: the world's soups, and T-junction, collinear-overlap,
+    crossing and many-splits fixtures."""
+    fan = [(0.0, 0.0, 1.0, 0.0)] + [(x, -0.1, x + 0.01, 0.1) for x in np.linspace(0.05, 0.95, 30)]
+    fixtures = [
+        [(0.0, 0.0, 2.0, 0.0), (1.0, 0.0, 1.0, 1.0)],  # T-junction
+        [(0.0, 0.0, 2.0, 0.0), (1.0, 0.0, 3.0, 0.0), (0.5, 0.0, 0.5, 1.0)],  # collinear
+        [(0.0, 0.0, 1.0, 1.0), (0.0, 1.0, 1.0, 0.0), (0.0, 0.5, 1.0, 0.5)],  # crossings
+        fan,  # one segment split 30 times
+    ]
+    for segs in kernel_world["soups"] + [np.asarray(f, dtype=float) for f in fixtures]:
+        assert np.array_equal(polygonize.node_segments(segs), _node_segments_dict(segs))

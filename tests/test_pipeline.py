@@ -577,6 +577,7 @@ def test_get_spark_session_settings(spark):
     assert conf.get("spark.sql.execution.arrow.pyspark.enabled") == "true"
     assert conf.get("spark.sql.execution.arrow.maxRecordsPerBatch") == "10000"
     assert conf.get("spark.sql.requireAllClusterKeysForCoPartition") == "false"
+    assert conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
     sc_conf = spark.sparkContext.getConf()
     assert sc_conf.get("spark.shuffle.sort.bypassMergeThreshold") == "2"
 
