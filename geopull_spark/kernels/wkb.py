@@ -245,10 +245,6 @@ class GeomBatch(NamedTuple):
     def __len__(self) -> int:
         return len(self.types)
 
-    def coord_offsets(self) -> np.ndarray:
-        """(n_geoms + 1,) coordinate offsets per geometry."""
-        return self.ring_offsets[self.part_offsets[self.geom_offsets]]
-
 
 def _offsets(counts: list) -> np.ndarray:
     out = np.zeros(len(counts) + 1, dtype=np.int64)
@@ -430,7 +426,7 @@ def geom_at(batch: GeomBatch, i: int):
 def batch_bounds(batch: GeomBatch) -> np.ndarray:
     """(n_geoms, 4) minx, miny, maxx, maxy per geometry (NaN when a
     geometry has no coordinates): one min/max reduction per batch."""
-    co = batch.coord_offsets()
+    co = batch.ring_offsets[batch.part_offsets[batch.geom_offsets]]  # per geometry
     out = np.full((len(batch), 4), np.nan)
     has = np.flatnonzero(co[1:] > co[:-1])
     if len(has):
