@@ -2,13 +2,5 @@ from .geometry import (  # noqa: F401
     st_area_m2,
     st_bbox,
     st_cell,
-    st_contains_point,
-    st_cover_cells,
-    st_explode_parts,
-    st_geohash,
-    st_geom_type,
     st_k_ring,
-    st_make_valid_parts,
-    st_normalize,
-    st_rep_point,
 )

@@ -88,33 +88,22 @@ def with_packed(df: DataFrame, ix: str, iy: str, res: int | str, out: str) -> Da
     return df.withColumn(out, packed).drop(ix, iy)
 
 
-def with_point_morton(df: DataFrame, lon: str = "lon", lat: str = "lat",
-                      out: str = "morton") -> DataFrame:
-    """``out`` = the MAX_RES morton code of each point: lon/lat quantized once
-    to integer tiles at MAX_RES, then interleaved. :func:`cell_at_expr` derives
-    the point's cell at any resolution from this one column."""
-    ix, iy = ixy_expr(lon, lat, MAX_RES)
-    df = with_spread(df.withColumns({"_qx": ix, "_qy": iy}), ["_qx", "_qy"])
-    return df.withColumn(out, F.expr("shiftleft(_qx, 1) | _qy")).drop("_qx", "_qy")
-
-
-def cell_at_expr(morton: str, res: int | str) -> Column:
-    """Cell id at ``res`` (an int or a column name) of a point whose MAX_RES
-    morton code is in column ``morton``. Per axis floor(f·2^r) ==
-    floor(f·2^MAX_RES) >> (MAX_RES−r), and interleaving commutes with that
-    shift, so the coarser code is the fine one shifted right 2·(MAX_RES−r)."""
-    r = _sql_res(res)
-    drop = 2 * (MAX_RES - res) if isinstance(res, int) else f"2 * ({MAX_RES} - {r})"
-    return F.expr(
-        f"shiftleft(CAST({r} AS BIGINT), 58) | shiftrightunsigned(`{morton}`, {drop})"
-    )
-
-
 def with_cell(df: DataFrame, res: int, lon: str = "lon", lat: str = "lat",
               out: str = "cell") -> DataFrame:
-    """Point cell id at one resolution — the join key, fully JVM-side."""
-    df = with_point_morton(df, lon, lat, out="_morton")
-    return df.withColumn(out, cell_at_expr("_morton", res)).drop("_morton")
+    """Point cell id at one resolution — the join key, fully JVM-side.
+
+    lon/lat are quantized once to integer tiles at MAX_RES and interleaved.
+    Per axis floor(f·2^r) == floor(f·2^MAX_RES) >> (MAX_RES−r), and
+    interleaving commutes with that shift, so the cell at ``res`` is the
+    MAX_RES morton code shifted right 2·(MAX_RES−res)."""
+    ix, iy = ixy_expr(lon, lat, MAX_RES)
+    df = with_spread(df.withColumns({"_qx": ix, "_qy": iy}), ["_qx", "_qy"])
+    df = df.withColumn("_morton", F.expr("shiftleft(_qx, 1) | _qy")).drop("_qx", "_qy")
+    cell = F.expr(
+        f"shiftleft(CAST({res} AS BIGINT), 58) | "
+        f"shiftrightunsigned(_morton, {2 * (MAX_RES - res)})"
+    )
+    return df.withColumn(out, cell).drop("_morton")
 
 
 def parent_expr(cell: str, cell_res: int, parent_res: int) -> Column:
@@ -140,10 +129,10 @@ def with_cover_cells(
     ``target`` caps the per-axis tile count by LOWERING the resolution for
     oversized bboxes (per row): a geometry spanning the whole region no longer
     blows the old hard cap (``ADVICE.md`` r1, cover-cap ValueError) — it just
-    indexes at a coarser res, and the probe side matches it with one row per
-    distinct ``res_out`` value (``spatial_join.doc_cells``). ``target=None``
-    keeps the resolution fixed (required for the refine-group cover, where
-    both cogroup sides must share one resolution).
+    indexes at a coarser res, recorded per row in ``res_out``
+    (``spatial_join.build_block_cell_index``). ``target=None`` keeps the
+    resolution fixed (required for the refine-group cover, where both
+    cogroup sides must share one resolution).
     """
     df = df.withColumns({
         "_fx0": F.expr(lon_fraction_sql("minx")),

@@ -29,12 +29,12 @@ block is copied to every salt, so a hot cell spreads over ``salt_k`` tasks.
 This is an explicit backstop on top of AQE (BASELINE.json north_star
 requirement).
 
-The streaming path (``streaming.ingest.assign_stream``) cannot cogroup a
-stream with a static side, so it keeps a stream-static equi-join against the
-narrow block-cell index (:func:`build_block_cell_index`). That index covers
-each bbox at an adaptive per-block resolution (a region with no streets is
-one region-sized block, indexed at a coarser res instead of raising, ADVICE
-r1), and :func:`doc_cells` probes it at every resolution present.
+The streaming path (``streaming.ingest``) uses the same geometry side and
+the same exact test (:func:`pip_pairs`): ``run_assign_stream`` calls
+:func:`assign_docs_full` per micro-batch against a cached refine geometry,
+and ``assign_stream``, which feeds a stateful aggregation and so cannot
+cogroup, joins the doc stream to the refine geometry on the parent cell and
+the closed bbox.
 """
 
 from __future__ import annotations
@@ -72,7 +72,8 @@ def build_block_cell_index(blocks: DataFrame, res: int = INDEX_RES) -> DataFrame
 
     Pure JVM: bbox cover via sequence-explode, with an adaptive per-row
     resolution for oversized bboxes. A pure function of the blocks snapshot,
-    so build it once per snapshot; the streaming path joins against it."""
+    so build it once per snapshot. No assignment path reads it: ``bench.py``
+    and the ``world_build`` benchmark still build it."""
     covered = cellexpr.with_cover_cells(_ensure_bbox(blocks), res)
     return covered.select("cell", "cell_res", "region_code", "block_id")
 
@@ -104,23 +105,6 @@ def build_refine_geometry(blocks: DataFrame) -> DataFrame:
     ).repartition(_refine_partitions(blocks), "g_pcell")
 
 
-def doc_cells(docs: DataFrame, block_cells: DataFrame) -> DataFrame:
-    """Probe side of the streaming cell join: ``docs`` (which carry lon, lat)
-    plus ``cell``, one row per (doc, resolution present in ``block_cells``).
-
-    Each point is quantized once (``cellexpr.with_point_morton``); its cell
-    at every index resolution is a shift of that one code. The index's
-    distinct ``cell_res`` values reach the doc side as a broadcast inside the
-    plan, so building the probe needs no driver round trip, and an empty
-    index yields no rows."""
-    res = block_cells.select(F.col("cell_res").alias("_res")).distinct()
-    return (
-        cellexpr.with_point_morton(docs, out="_morton")
-        .crossJoin(F.broadcast(res))
-        .select(*docs.columns, cellexpr.cell_at_expr("_morton", "_res").alias("cell"))
-    )
-
-
 _REFINE_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.StringType()),
@@ -129,6 +113,26 @@ _REFINE_SCHEMA = T.StructType(
         T.StructField("block_id", T.StringType()),
     ]
 )
+
+
+def pip_pairs(px, py, gi, wkbs):
+    """Exact PIP of candidate pairs: point (px[r], py[r]) against geometry
+    ``gi[r]`` of the Arrow WKB column ``wkbs``. Each geometry used is decoded
+    once and every pair is tested in one vectorized pass (``build_edge_soup``
+    + ``points_in_geoms``).
+
+    Returns (keep, take, local): the mask of pairs whose point is inside,
+    the Arrow indices into ``wkbs`` of the geometries used, and each pair's
+    position in ``take``."""
+    import pyarrow as pa
+
+    from ..kernels import wkb as _wkb
+    from ..kernels.pointops import build_edge_soup, points_in_geoms
+
+    used, local = np.unique(gi, return_inverse=True)
+    take = pa.array(used)
+    soup = build_edge_soup([_wkb.loads(b) for b in wkbs.take(take).to_pylist()])
+    return points_in_geoms(px, py, local, soup), take, local
 
 
 def _pip_refine_cogroup(docs, geom):
@@ -143,24 +147,18 @@ def _pip_refine_cogroup(docs, geom):
     paired blocks become Python objects."""
     import pyarrow as pa
 
-    from ..kernels import wkb as _wkb
-    from ..kernels.pointops import build_edge_soup, points_in_boxes, points_in_geoms
+    from ..kernels.pointops import points_in_boxes
 
     px, py = (docs.column(c).to_numpy() for c in ("lon", "lat"))
     box = [geom.column(c).to_numpy() for c in ("minx", "miny", "maxx", "maxy")]
     di, gi = points_in_boxes(px, py, *box)
     if len(di):
-        used, local = np.unique(gi, return_inverse=True)
-        take = pa.array(used)
-        soup = build_edge_soup(
-            [_wkb.loads(b) for b in geom.column("g_geometry").take(take).to_pylist()]
-        )
-        keep = points_in_geoms(px[di], py[di], local, soup)
+        keep, take, local = pip_pairs(px[di], py[di], gi, geom.column("g_geometry"))
         di, gi, local = di[keep], gi[keep], local[keep]
         # boundary docs match 2 blocks → min block_id per doc
         ids = np.asarray(geom.column("g_block_id").take(take).to_pylist(), dtype=object)
-        rank = np.empty(len(used), dtype=np.int64)
-        rank[np.argsort(ids)] = np.arange(len(used))
+        rank = np.empty(len(take), dtype=np.int64)
+        rank[np.argsort(ids)] = np.arange(len(take))
         o = np.lexsort((rank[local], di))
         first = np.ones(len(o), dtype=bool)
         first[1:] = di[o][1:] != di[o][:-1]
@@ -212,7 +210,7 @@ def assign_docs_to_blocks(
     )
 
 
-def assign_docs_full(docs: DataFrame, blocks: DataFrame, **kw) -> DataFrame:
+def assign_docs_full(docs: DataFrame, blocks: DataFrame | None, **kw) -> DataFrame:
     """Assignment carrying the full interleaved payload: the spans array rides
     the shuffle opaquely (span-sequence invariant checked in tests)."""
     assigned = assign_docs_to_blocks(docs.select("doc_id", "lon", "lat"), blocks, **kw)

@@ -111,6 +111,14 @@ def get_spark(
         # the in-process python driver), so set both.
         os.environ["PYSPARK_PYTHON"] = worker_py
         b = b.config("spark.pyspark.python", worker_py)
+    # Python workers find geopull_spark only in the driver's working
+    # directory or on the PYTHONPATH they inherit from the JVM. Put the
+    # package's parent directory on that path before the JVM starts, so a
+    # driver may start anywhere: a directory entry, which pyworker.sh keeps.
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    path = os.environ.get("PYTHONPATH", "")
+    if root not in path.split(os.pathsep):
+        os.environ["PYTHONPATH"] = root + (os.pathsep + path if path else "")
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()

@@ -2,20 +2,24 @@
 
 The reference is batch-only (SURVEY.md §2.9) — its "incremental" behavior is
 the skip-if-exists cache. Our engine adds the streaming path a production
-doc pipeline needs: new interleaved-doc files land continuously; each
-micro-batch is cell-indexed, joined against the static narrow block-cell
-index (stream-static join — no state store needed for the join itself),
-PIP-refined and appended to the assignment table.
+doc pipeline needs: new interleaved-doc files land continuously and each
+micro-batch is assigned to blocks and appended to the assignment table.
 
-Boundary determinism (ADVICE r1): a doc on a shared block boundary matches
-two blocks in the raw stream-static join. Both sinks resolve it to the batch
-path's min(block_id) tie-break — ``run_assign_stream`` dedups per micro-batch
-inside ``foreachBatch`` (writing each batch to its own partition directory,
-idempotent on retry), and ``windowed_block_counts`` chains a per-(window,
-doc) min aggregation before the per-block count (multiple stateful operators,
-Spark 3.5+). Stream output therefore matches ``assign_docs_to_blocks`` row
-for row.
+Both sinks assign through the batch path's geometry side
+(``spatial_join.build_refine_geometry``) and its exact PIP test
+(``spatial_join.pip_pairs``), so a doc on a shared block boundary resolves
+to the batch path's min(block_id) tie-break:
 
+* ``run_assign_stream`` calls ``assign_docs_full`` inside ``foreachBatch``
+  against one cached refine geometry — the batch kernel, tie-break included
+  — writing each batch to its own partition directory (idempotent on retry);
+* ``windowed_block_counts`` feeds a stateful aggregation, so it uses
+  ``assign_stream``: a stream-static join on the parent cell and the closed
+  bbox, refined by one ``mapInArrow`` pass. It emits one row per (doc,
+  containing block); a per-(window, doc) min aggregation chained before the
+  per-block count (multiple stateful operators, Spark 3.5+) breaks the tie.
+
+Stream output therefore matches ``assign_docs_to_blocks`` row for row.
 ``Trigger.AvailableNow`` drains the backlog batch-style and checkpoints —
 resume is exactly-once on top of the same snapshot-manifest warehouse.
 """
@@ -26,8 +30,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.geometry import st_contains_point
-from ..operators.spatial_join import INDEX_RES, build_block_cell_index, doc_cells
+from ..functions import cellexpr
+from ..operators.spatial_join import (
+    PARENT_RES,
+    assign_docs_full,
+    build_refine_geometry,
+    pip_pairs,
+)
 
 DOC_STREAM_SCHEMA = T.StructType(
     [
@@ -47,35 +56,39 @@ def read_doc_stream(spark: SparkSession, input_dir: str) -> DataFrame:
     )
 
 
-def assign_stream(doc_stream: DataFrame, blocks: DataFrame,
-                  block_cells: DataFrame | None = None,
-                  res: int = INDEX_RES) -> DataFrame:
-    """Stream-static join: multi-res cell equi-join against the static narrow
-    index + geometry lookup by block_id + exact PIP refine, per micro-batch.
+_STREAM_SCHEMA = "doc_id string, block_id string, lon double, lat double, event_ts timestamp"
+
+
+def _refine_stream_pairs(batches):
+    """Exact PIP of (doc, block) bbox pairs, one row each: the rows of one
+    block share its WKB, so the first row of each block stands for it."""
+    import numpy as np
+    import pyarrow as pa
+
+    for b in batches:
+        px, py = (b.column(c).to_numpy() for c in ("lon", "lat"))
+        ids = b.column("block_id").to_numpy(zero_copy_only=False)
+        _, first, inv = np.unique(ids, return_index=True, return_inverse=True)
+        keep, _, _ = pip_pairs(px, py, first[inv], b.column("g_geometry"))
+        yield b.drop_columns("g_geometry").filter(pa.array(keep))
+
+
+def assign_stream(doc_stream: DataFrame, blocks: DataFrame) -> DataFrame:
+    """Stream-static join of ``doc_stream`` (doc_id, lon, lat, event_ts)
+    against the refine geometry of ``blocks``: equal parent cell and the doc
+    in the closed bbox, then one exact PIP pass per Arrow batch.
 
     Emits one row per (doc, containing block) — boundary docs can emit two;
-    the sinks dedup (see module docstring)."""
-    if block_cells is None:
-        block_cells = build_block_cell_index(blocks, res)
-    d = doc_cells(doc_stream, block_cells)
-    idx_geo = block_cells.select("cell", "region_code", "block_id").join(
-        blocks.select(F.col("block_id"), F.col("geometry")), "block_id"
+    the caller breaks the tie (see module docstring)."""
+    d = cellexpr.with_cell(
+        doc_stream.select("doc_id", "lon", "lat", "event_ts"), PARENT_RES, out="pcell"
     )
-    joined = d.join(idx_geo, "cell", "inner")
-    refined = joined.filter(
-        st_contains_point(F.col("geometry"), F.col("lon"), F.col("lat"))
-    )
-    return refined.select("doc_id", "block_id", "region_code", "lon", "lat", "event_ts")
-
-
-def _dedup_batch(batch: DataFrame) -> DataFrame:
-    """min(block_id) per doc — the batch path's boundary tie-break."""
-    picked = F.min(
-        F.struct("block_id", "region_code", "lon", "lat", "event_ts")
-    ).alias("p")
-    return batch.groupBy("doc_id").agg(picked).select(
-        "doc_id", "p.block_id", "p.region_code", "p.lon", "p.lat", "p.event_ts"
-    )
+    pairs = d.join(
+        build_refine_geometry(blocks),
+        F.expr("pcell = g_pcell AND lon BETWEEN minx AND maxx AND lat BETWEEN miny AND maxy"),
+    ).select("doc_id", F.col("g_block_id").alias("block_id"), "lon", "lat",
+             "event_ts", "g_geometry")
+    return pairs.mapInArrow(_refine_stream_pairs, _STREAM_SCHEMA)
 
 
 def run_assign_stream(
@@ -84,27 +97,30 @@ def run_assign_stream(
     blocks: DataFrame,
     output_dir: str,
     checkpoint_dir: str,
-    block_cells: DataFrame | None = None,
 ) -> None:
     """Drain the current backlog with AvailableNow (checkpointed, resumable).
 
-    ``foreachBatch`` dedups boundary docs per micro-batch and writes each
+    ``foreachBatch`` assigns each micro-batch with the batch kernel against
+    one cached refine geometry, keeps the assigned docs and writes each
     batch to its own partition directory with overwrite — idempotent if a
     batch is retried after a crash (same batch_id → same directory)."""
-    out = assign_stream(read_doc_stream(spark, input_dir), blocks, block_cells)
+    geom = build_refine_geometry(blocks).persist()
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
-        _dedup_batch(batch).write.mode("overwrite").parquet(
-            f"{output_dir}/batch_id={batch_id}"
-        )
+        assign_docs_full(batch, None, geom_cells=geom).filter(
+            F.col("block_id").isNotNull()
+        ).write.mode("overwrite").parquet(f"{output_dir}/batch_id={batch_id}")
 
-    q = (
-        out.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    try:
+        q = (
+            read_doc_stream(spark, input_dir).writeStream.foreachBatch(write_batch)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        geom.unpersist()
 
 
 def dedup_doc_stream(docs: DataFrame, text_col: str = "text",
@@ -324,13 +340,12 @@ def event_sessions(events: DataFrame, gap: str = "30 minutes",
 
 
 def windowed_block_counts(doc_stream: DataFrame, blocks: DataFrame,
-                          block_cells: DataFrame | None = None,
                           window: str = "1 hour", watermark: str = "2 hours") -> DataFrame:
     """Watermarked tumbling-window docs-per-block rollup (late data beyond the
     watermark is dropped; state is bounded). Chained stateful aggregation:
     per-(window, doc) min-block dedup feeds the per-(window, block) count, so
     boundary docs are not double-counted (stream/batch parity)."""
-    assigned = assign_stream(doc_stream, blocks, block_cells)
+    assigned = assign_stream(doc_stream, blocks)
     dedup = (
         assigned.withWatermark("event_ts", watermark)
         .groupBy(F.window("event_ts", window).alias("w"), F.col("doc_id"))

@@ -565,6 +565,33 @@ def test_get_spark_defaults_worker_python_to_driver(spark, monkeypatch):
     assert os.path.basename(os.environ["PYSPARK_PYTHON"]) == "pyworker.sh"
 
 
+def test_get_spark_from_a_foreign_working_directory(tmp_path):
+    """A driver started outside the repo root, with no PYTHONPATH, runs a
+    Python UDF: ``get_spark`` puts the package's parent directory on the
+    workers' path."""
+    import subprocess
+    import sys
+
+    from geopull_spark.kernels import cells as kc
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        "import sys; sys.path.insert(0, sys.argv[1])\n"
+        "from pyspark.sql import functions as F\n"
+        "from geopull_spark.functions.geometry import st_cell\n"
+        "from geopull_spark.session import get_spark\n"
+        "spark = get_spark(master='local[1]', shuffle_partitions=1)\n"
+        "print(spark.range(1).select(st_cell(F.lit(0.5), F.lit(0.5), 7)).head()[0])\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEM"] = "1g"
+    r = subprocess.run([sys.executable, "-c", script, repo], cwd=tmp_path, env=env,
+                       capture_output=True, text=True, timeout=600)
+    assert r.returncode == 0, r.stderr[-3000:]
+    assert r.stdout.split()[-1] == str(int(kc.cell_id(np.array([0.5]), np.array([0.5]), 7)[0]))
+
+
 def test_get_spark_session_settings(spark):
     """The settings the engine relies on, whether ``get_spark`` sets them or
     they are pyspark defaults it no longer restates: a default that drifts

@@ -1,7 +1,8 @@
-"""Streaming ingest tests: stream-static assignment matches batch; resume
-from checkpoint processes only new files; watermarked window counts."""
+"""Streaming ingest tests: stream assignment matches batch; resume from
+checkpoint processes only new files; watermarked window counts."""
 
 import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -70,9 +71,23 @@ def test_stream_matches_batch_and_resumes(spark, blocks, tmp_path):
 
 
 def test_windowed_counts(spark, blocks, tmp_path):
+    """Closed-window per-block counts equal batch assignment's per-block
+    counts over the same docs. A late doc (05:00, inside a block so that it
+    reaches the watermark) moves the watermark past the end of the 00:00
+    window, so that window closes in the same AvailableNow run."""
+    batch = spatial_join.assign_docs_to_blocks(
+        _doc_batch(spark, 0, 150).select("doc_id", "lon", "lat"), blocks
+    ).collect()
+    want = Counter(r["block_id"] for r in batch)
+
     in_dir = str(tmp_path / "in2")
     os.makedirs(in_dir, exist_ok=True)
     _doc_batch(spark, 0, 150).write.mode("append").parquet(in_dir)
+    late = spark.createDataFrame([("late", batch[0]["lon"], batch[0]["lat"])],
+                                 ["doc_id", "lon", "lat"])
+    late.select("doc_id", "lon", "lat",
+                F.to_timestamp(F.lit("2026-01-01 05:00:00")).alias("event_ts")
+                ).write.mode("append").parquet(in_dir)
     stream = ingest.read_doc_stream(spark, in_dir)
     counts = ingest.windowed_block_counts(stream, blocks)
     q = (
@@ -84,37 +99,35 @@ def test_windowed_counts(spark, blocks, tmp_path):
         .start()
     )
     q.awaitTermination()
-    # append mode emits only closed windows (watermark not passed on a single
-    # batch) — validate via complete-mode semantics instead: run the same agg
-    # in batch and check the rollup is consistent
-    batch_counts = (
-        ingest.assign_stream(_doc_batch(spark, 0, 150), blocks)
-        .groupBy("block_id").agg(F.count("*").alias("n_docs"))
-    )
-    total = batch_counts.agg(F.sum("n_docs")).head()[0]
-    assert total and total > 0
+    got = spark.sql("SELECT window_start, block_id, n_docs FROM wincounts").collect()
+    assert {str(r["window_start"]) for r in got} == {"2026-01-01 00:00:00"}
+    assert want and {r["block_id"]: r["n_docs"] for r in got} == want
 
 
-def test_boundary_doc_parity_and_uniqueness(spark, blocks):
+def test_boundary_doc_parity_and_uniqueness(spark, blocks, tmp_path):
     """A doc exactly on a street shared by two blocks must yield at most one
-    assignment (min block_id), identically in batch and stream paths."""
-    from geopull_spark.operators import spatial_join
-
-    bc = spatial_join.build_block_cell_index(blocks)
+    assignment (min block_id), identically in batch and both stream paths:
+    ``run_assign_stream`` and ``assign_stream`` + min per doc."""
     # streets_per_region=25 → n_grid=3 → vertical streets at x = 0.25/0.5/0.75
     pts = [("edge1", 0.25, 0.33), ("edge2", 0.5, 0.61), ("inner", 0.1, 0.1)]
     batch_docs = spark.createDataFrame(pts, ["doc_id", "lon", "lat"])
-    batch = spatial_join.assign_docs_to_blocks(batch_docs, blocks, bc).collect()
+    batch = spatial_join.assign_docs_to_blocks(batch_docs, blocks).collect()
     assert len(batch) == len({r["doc_id"] for r in batch})  # unique per doc
+    want = {(r["doc_id"], r["block_id"]) for r in batch}
 
     stream_in = batch_docs.withColumn(
         "event_ts", F.to_timestamp(F.lit("2026-01-01 00:00:00"))
     )
-    raw = ingest.assign_stream(stream_in, blocks, bc)  # pure transformations
-    dedup = ingest._dedup_batch(raw).collect()
-    assert {(r["doc_id"], r["block_id"]) for r in dedup} == {
-        (r["doc_id"], r["block_id"]) for r in batch
-    }
+    raw = ingest.assign_stream(stream_in, blocks)  # pure transformations
+    picked = raw.groupBy("doc_id").agg(F.min("block_id").alias("block_id")).collect()
+    assert {(r["doc_id"], r["block_id"]) for r in picked} == want
+
+    in_dir, out_dir = str(tmp_path / "bin"), str(tmp_path / "bout")
+    stream_in.write.parquet(in_dir)
+    ingest.run_assign_stream(spark, in_dir, blocks, out_dir, str(tmp_path / "bckpt"))
+    out = spark.read.parquet(out_dir).select("doc_id", "block_id").collect()
+    assert len(out) == len(batch)
+    assert {(r["doc_id"], r["block_id"]) for r in out} == want
 
 
 def test_event_sessions_streaming_and_batch(spark, tmp_path):
