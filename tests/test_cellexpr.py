@@ -30,6 +30,28 @@ def test_point_cells_match_numpy(spark):
         assert (got == kc.cell_id(lon, lat, res)).all(), res
 
 
+def test_doc_cells_match_numpy_per_res_and_multi_res(spark):
+    """A point's cell at one or several resolutions at once, each derived by
+    shifting one MAX_RES morton code: with_cell at MAX_RES, then parent_expr
+    down to every resolution of the list."""
+    rng = np.random.default_rng(7)
+    lon = rng.uniform(-180, 180, 500)
+    lat = rng.uniform(-90, 90, 500)
+    # the ends of the ranges, where the fraction clamps
+    lon[:4] = [-180.0, 180.0, 0.0, -0.0]
+    lat[:4] = [-90.0, 90.0, 0.0, 89.999999]
+    docs = spark.createDataFrame(pd.DataFrame(
+        {"doc_id": [str(i) for i in range(len(lon))], "lon": lon, "lat": lat}))
+    fine = cellexpr.with_cell(docs, kc.MAX_RES, out="mcell")
+    for res_list in ([0], [7], [10], [14], [28], [8, 11, 14]):
+        d = fine.select("doc_id", *[cellexpr.parent_expr("mcell", kc.MAX_RES, r).alias(f"c{r}")
+                                    for r in res_list])
+        got = {int(r["doc_id"]): {r[f"c{res}"] for res in res_list} for r in d.collect()}
+        want = {i: {int(kc.cell_id(lon[i:i + 1], lat[i:i + 1], res)[0]) for res in res_list}
+                for i in range(len(lon))}
+        assert got == want, res_list
+
+
 def test_with_cell_stays_small_in_the_plan(spark):
     """Analyzed expression nodes of the point-cell projection. The key reads
     the quantized point by reference; the single-expression form of the
