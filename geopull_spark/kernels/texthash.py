@@ -3,8 +3,8 @@
 Spark's native ``substr(text, i, k)`` re-scans the UTF8 string to find code
 point ``i`` — per-gram substr makes shingling O(n²) in text length. These
 numpy kernels compute polynomial rolling hashes over the raw UTF-8 bytes in
-one pass; used via Arrow-batched pandas UDFs for minhash/fingerprint at
-arbitrary document lengths.
+one pass; the MinHash signature reads them straight from an Arrow string
+column (:func:`minhash_bands_arrow`), the fingerprint from a pandas UDF.
 
 Hash: h(i) = Σ b[i+j]·B^(k-1-j) mod P with B=257, P=2³¹−1 (Mersenne).
 All arithmetic stays within uint64 (P·B + 255 < 2⁴⁰; P·P < 2⁶²).
@@ -16,6 +16,17 @@ import numpy as np
 
 _B = np.uint64(257)
 _P = np.uint64((1 << 31) - 1)
+
+# Bytes of text per window of the batch kernels. The buffers are allocated
+# once per batch and reused by every window; at 64 KB the hash pass works on
+# three 512 KB uint64 arrays and the band pass on about as much, so each
+# fits a core's 2 MB L2. minhash_bands_batch over 10k corpus docs (3.1 MB, k=8, 8 bands,
+# one core of a shared 4-core Xeon, median of 15): 41/33/26/19/23/23/33/47
+# ns per byte at windows of 4/8/16/32/64/128/256/512 KB, and 17 ns per byte
+# for one 3 MB doc at 32 and 64 KB. 32–128 KB is flat within this host's
+# run-to-run noise; below, the per-window numpy calls dominate, above, the
+# buffers spill out of L2.
+_CHUNK = 1 << 16
 
 
 def kgram_hashes_fast(data: bytes, k: int) -> np.ndarray:
@@ -69,68 +80,149 @@ def minhash_bands(data: bytes, k: int, n_bands: int, stride: int = 1) -> list[in
     return out
 
 
-def minhash_bands_batch(datas: list[bytes], k: int, n_bands: int,
-                        stride: int = 1) -> np.ndarray:
-    """Batched :func:`minhash_bands`: ONE kernel pass per Arrow batch
-    instead of one Python call per document (VERDICT r4 #6 — the same
-    fixed-per-call-overhead shape the r4 PIP profiling measured at ~50µs a
-    call, which at 10⁹ short docs is hours of pure overhead).
+def kgram_hashes(b: np.ndarray, k: int, out: np.ndarray, tmp: np.ndarray) -> np.ndarray:
+    """The hash of every k-gram of ``b`` (byte values as uint64, at least k
+    of them) into ``out[:len(b) - k + 1]``, equal to
+    :func:`kgram_hashes_fast`. ``out`` and ``tmp`` are uint64 buffers at
+    least that long; nothing else is allocated.
 
-    Bit-identical to the per-document kernel: all documents ≥ k bytes are
-    concatenated and rolling-hashed in one :func:`kgram_hashes_fast` pass —
-    a k-gram's polynomial hash depends only on its own k bytes, so grams
-    that don't straddle a document seam equal the per-doc hashes exactly;
-    straddling grams are never indexed. Per-band affine mixes + segmented
-    ``np.minimum.reduceat`` give each document's band minima. Documents
-    shorter than k (where the per-doc kernel shrinks k) fall back to the
-    scalar path. Returns (n_docs, n_bands) int64.
+    One multiply-add per gram offset j: x = Σ b[i+j]·(B^(k−1−j) mod P) is
+    below 255·k·P, exact in uint64 for any k < 2²³. One Mersenne fold
+    r = (x & P) + (x >> 31) ≡ x (mod P), since 2³¹ ≡ 1, leaves r < P + 255·k
+    < 2P, and min(r, r − P) is the canonical residue (r − P wraps above r
+    when r < P)."""
+    m = len(b) - k + 1
+    acc, t = out[:m], tmp[:m]
+    np.multiply(b[:m], np.uint64(pow(int(_B), k - 1, int(_P))), out=acc)
+    for j in range(1, k - 1):
+        np.multiply(b[j:j + m], np.uint64(pow(int(_B), k - 1 - j, int(_P))), out=t)
+        np.add(acc, t, out=acc)
+    if k > 1:
+        np.add(acc, b[k - 1:k - 1 + m], out=acc)
+    np.bitwise_and(acc, _P, out=t)
+    np.right_shift(acc, np.uint64(31), out=acc)
+    np.add(acc, t, out=acc)
+    np.subtract(acc, _P, out=t)
+    return np.minimum(acc, t, out=acc)
 
-    Documents are processed in ~512 KB sub-groups: beyond ~1 MB the
-    kernel's whole-array temporaries fall out of cache and throughput
-    collapses ~20× (measured: 32-45 ns/byte at ≤1 MB vs 866 ns/byte at
-    10 MB), so mid-size groups are the sweet spot — big enough to amortize
-    per-call overhead, small enough to stay cache-resident. Peak memory is
-    O(chunk), independent of batch size."""
-    n_docs = len(datas)
-    out = np.zeros((n_docs, n_bands), dtype=np.int64)
-    lens = np.array([len(d) for d in datas], dtype=np.int64)
-    long_idx = np.flatnonzero(lens >= k)
-    for i in np.flatnonzero(lens < k):  # rare: shorter than one gram
-        out[i] = minhash_bands(datas[i], k, n_bands, stride)
-    chunk_bytes = 1 << 19
-    g0 = 0
-    while g0 < len(long_idx):
-        g1, tot = g0 + 1, int(lens[long_idx[g0]])
-        while g1 < len(long_idx) and tot + lens[long_idx[g1]] <= chunk_bytes:
-            tot += int(lens[long_idx[g1]])
-            g1 += 1
-        gidx = long_idx[g0:g1]
-        g0 = g1
-        L = lens[gidx]
-        starts = np.concatenate([[0], np.cumsum(L)[:-1]])
-        h = kgram_hashes_fast(b"".join(datas[i] for i in gidx), k)
-        # valid gram starts for doc d: starts[d] + stride·(0..n_valid[d]-1)
-        n_valid = (L - k) // stride + 1
-        bnd = np.concatenate([[0], np.cumsum(n_valid)[:-1]])
-        base = np.arange(int(n_valid.sum()), dtype=np.int64)
-        offs = (base - np.repeat(bnd, n_valid)) * stride
-        hv = h[np.repeat(starts, n_valid) + offs]
+
+def minhash_bands_buffers(data: np.ndarray, offsets: np.ndarray, valid: np.ndarray,
+                          k: int, n_bands: int, stride: int = 1) -> np.ndarray:
+    """:func:`minhash_bands` of every valid document of an Arrow string
+    column, read from its buffers: document i is ``data[offsets[i]:
+    offsets[i + 1]]`` (uint8; ``offsets`` need not start at 0). Returns
+    (n_docs, n_bands) int64; a row whose ``valid`` is False stays 0.
+
+    Bit-identical to the per-document kernel. The batch is hashed in
+    windows of _CHUNK gram starts over the data buffer in place: a k-gram's
+    hash depends only on its own k bytes, so a gram inside a document
+    equals the per-document hash and a gram that straddles a seam is never
+    gathered. A document longer than a window spans several, its band
+    minima combined across them. Documents shorter than k (where the
+    per-document kernel shrinks k) take the scalar path.
+
+    Bands: v_b = (h·(2b+1) + c_b) mod P with c_b = c_0 + b·D, so
+    v_b = (v_{b−1} + (2h + D) mod P) mod P: one add and one conditional
+    subtract per band, in uint32 (two residues sum below 2³²), then a
+    segmented ``np.minimum.reduceat`` per band."""
+    lo = offsets[:-1].astype(np.int64)
+    lens = offsets[1:] - lo
+    out = np.zeros((len(lens), n_bands), dtype=np.int64)
+    for i in np.flatnonzero(valid & (lens < k)):  # rare: shorter than one gram
+        out[i] = minhash_bands(data[lo[i]:lo[i] + lens[i]].tobytes(), k, n_bands, stride)
+    li = np.flatnonzero(valid & (lens >= k))
+    if not len(li):
+        return out
+    gs = lo[li]  # each long document's first and one-past-last gram start
+    ge = gs + (lens[li] - k) // stride * stride + 1
+    p = np.uint32(_P)
+    c0 = np.uint32(0x9E3779B9 % int(_P))
+    d = np.uint32(0x85EBCA6B % int(_P))
+    mins = np.full((n_bands, len(li)), p, dtype=np.uint32)
+    b = np.empty(_CHUNK + k - 1, dtype=np.uint64)
+    h, t64, hv = (np.empty(_CHUNK, dtype=np.uint64) for _ in range(3))
+    v, w, t = (np.empty(_CHUNK, dtype=np.uint32) for _ in range(3))
+    steps = np.arange(_CHUNK, dtype=np.int64) * stride
+    j, p1, end = 0, 0, int(ge[-1])
+    while j < len(li):
+        p0 = max(p1, int(gs[j]))  # this window's gram starts: [p0, p1)
+        p1 = min(p0 + _CHUNK, end)
+        np.copyto(b[:p1 - p0 + k - 1], data[p0:p1 + k - 1])
+        kgram_hashes(b[:p1 - p0 + k - 1], k, h, t64)
+        j1 = int(np.searchsorted(gs, p1))
+        s = gs[j:j1]  # documents j..j1-1 have a gram start in the window
+        first = s + np.maximum(p0 - s, 0) // -stride * -stride  # on the stride
+        cnt = np.maximum((np.minimum(ge[j:j1], p1) - first + stride - 1) // stride, 0)
+        sel = np.flatnonzero(cnt)
+        cnt, first = cnt[sel], first[sel]
+        bnd = np.zeros(len(sel), dtype=np.int64)
+        np.cumsum(cnt[:-1], out=bnd[1:])
+        n = int(bnd[-1] + cnt[-1])
+        idx = np.repeat(first - p0 - bnd * stride, cnt)
+        idx += steps[:n]
+        np.take(h, idx, out=hv[:n], mode="clip")  # in range; "raise" copies `out`
+        ww, vv, tt = w[:n], v[:n], t[:n]
+        np.add(hv[:n], hv[:n], out=ww)  # (2h + D) mod P
+        np.subtract(ww, p, out=tt)
+        np.minimum(ww, tt, out=ww)
+        np.add(ww, d, out=ww)
+        np.subtract(ww, p, out=tt)
+        np.minimum(ww, tt, out=ww)
+        np.add(hv[:n], c0, out=vv)  # band 0: (h + c_0) mod P
+        sel += j
         for band in range(n_bands):
-            a = np.uint64(2 * band + 1)
-            c = np.uint64(0x9E3779B9 + band * 0x85EBCA6B)
-            mixed = (hv * a + c) % _P
-            out[gidx, band] = np.minimum.reduceat(mixed, bnd).astype(np.int64)
+            if band:
+                np.add(vv, ww, out=vv)
+            np.subtract(vv, p, out=tt)
+            np.minimum(vv, tt, out=vv)
+            mins[band, sel] = np.minimum(mins[band, sel], np.minimum.reduceat(vv, bnd))
+        j = int(np.searchsorted(ge, p1, side="right"))
+    out[li] = mins.T
     return out
 
 
+def minhash_bands_arrow(texts, k: int, n_bands: int, stride: int = 1):
+    """:func:`minhash_bands` of every document of an Arrow ``string`` or
+    ``large_string`` array (sliced or not) as a list<int64> array of
+    ``n_bands`` values per row; a null text gets ``n_bands`` nulls. The
+    validity, offsets and data buffers are read in place: no Python string
+    or bytes object is made per document."""
+    import pyarrow as pa
+
+    n, off = len(texts), texts.offset
+    validity, offsets, data = texts.buffers()
+    odt = np.int64 if pa.types.is_large_string(texts.type) else np.int32
+    offsets = (np.frombuffer(offsets, dtype=odt, count=n + 1, offset=off * odt(0).itemsize)
+               if n else np.zeros(1, dtype=odt))
+    data = np.frombuffer(data, dtype=np.uint8) if data is not None else np.zeros(0, np.uint8)
+    valid = (np.ones(n, dtype=bool) if validity is None else np.unpackbits(
+        np.frombuffer(validity, dtype=np.uint8), count=off + n, bitorder="little")[off:].view(bool))
+    sig = minhash_bands_buffers(data, offsets, valid, k, n_bands, stride)
+    values = pa.array(sig.ravel(), mask=None if validity is None else np.repeat(~valid, n_bands))
+    return pa.ListArray.from_arrays(
+        pa.array(np.arange(0, (n + 1) * n_bands, n_bands, dtype=np.int32)), values)
+
+
+def minhash_bands_batch(datas: list[bytes], k: int, n_bands: int,
+                        stride: int = 1) -> np.ndarray:
+    """:func:`minhash_bands` of each document of ``datas`` in one
+    :func:`minhash_bands_buffers` pass: (n_docs, n_bands) int64."""
+    lens = np.fromiter(map(len, datas), dtype=np.int64, count=len(datas))
+    offsets = np.zeros(len(datas) + 1, dtype=np.int64)
+    np.cumsum(lens, out=offsets[1:])
+    data = np.frombuffer(b"".join(datas), dtype=np.uint8)
+    return minhash_bands_buffers(data, offsets, np.ones(len(datas), dtype=bool),
+                                 k, n_bands, stride)
+
+
 def winnow_fingerprint_batch(datas: list[bytes], k: int, window: int) -> np.ndarray:
-    """Batched :func:`winnow_fingerprint`: ONE rolling-hash pass per ~512 KB
+    """Batched :func:`winnow_fingerprint`: ONE rolling-hash pass per ~_CHUNK
     sub-group instead of one Python call per document — the same
-    fixed-per-call-overhead shape as :func:`minhash_bands_batch` (VERDICT
+    fixed-per-call-overhead shape as :func:`minhash_bands_buffers` (VERDICT
     r4 #6), applied to the winnowing fingerprint.
 
     Bit-identical to the per-document kernel: documents ≥ k bytes are
-    concatenated and hashed in one :func:`kgram_hashes_fast` pass (a k-gram
+    concatenated and hashed in one :func:`kgram_hashes` pass (a k-gram
     hash depends only on its own k bytes; seam-straddling grams are never
     gathered). Tumbling-window minima come from one segmented
     ``np.minimum.reduceat``; per-document distinct minima from one lexsort;
@@ -150,18 +242,18 @@ def winnow_fingerprint_batch(datas: list[bytes], k: int, window: int) -> np.ndar
         out[i] = winnow_fingerprint(datas[i], k, window)
     fnv_init = np.uint64(1469598103934665603)
     fnv_prime = np.uint64(1099511628211)
-    chunk_bytes = 1 << 19  # cache-resident sub-groups, see minhash_bands_batch
     g0 = 0
     while g0 < len(long_idx):
         g1, tot = g0 + 1, int(lens[long_idx[g0]])
-        while g1 < len(long_idx) and tot + lens[long_idx[g1]] <= chunk_bytes:
+        while g1 < len(long_idx) and tot + lens[long_idx[g1]] <= _CHUNK:
             tot += int(lens[long_idx[g1]])
             g1 += 1
         gidx = long_idx[g0:g1]
         g0 = g1
         L = lens[gidx]
         starts = np.concatenate([[0], np.cumsum(L)[:-1]])
-        h = kgram_hashes_fast(b"".join(datas[i] for i in gidx), k)
+        b = np.frombuffer(b"".join(datas[i] for i in gidx), dtype=np.uint8).astype(np.uint64)
+        h = kgram_hashes(b, k, np.empty_like(b), np.empty_like(b))
         n_grams = L - k + 1
         # per-doc participation: n_win tumbling windows of `window` grams
         # (tail dropped), except n_grams < window → ONE window over all grams

@@ -1,8 +1,8 @@
 """Deduplication operators over the documents table.
 
 Large-scale training-pipeline dedup. All of it is JVM-side Catalyst
-expressions except the MinHash signature, a pandas UDF evaluated once per
-document:
+expressions except the MinHash signature, a scalar Arrow UDF evaluated once
+per document:
 
   exact_dedup        — content-hash groupBy (md5), keep min doc_id
   minhash_lsh_pairs  — char-shingles → per-band min-hash → band buckets →
@@ -23,11 +23,11 @@ all-pairs — identical connected components, bounded memory (r3 VERDICT #1).
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 
 def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -38,29 +38,24 @@ def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
 
 def _signatures(docs: DataFrame, text_col: str, n_bands: int, id_col: str) -> DataFrame:
     """(id, bands): the n_bands-long MinHash signature from the rolling-hash
-    kernel (pandas UDF). A null text gets an array of nulls, so such
+    kernel (scalar Arrow UDF). A null text gets an array of nulls, so such
     documents share the (band, NULL) buckets.
 
     A native-SQL shingle variant (transform/sequence over ``substr``) would
     be O(n²) in text length because Spark's ``substr`` re-scans the UTF8
-    string per gram (measured r1) — hence the numpy kernel. The kernel runs
-    ONCE per Arrow batch over concatenated bytes + offsets (VERDICT r4 #6;
-    bit-identical to the per-doc path, pinned by
-    test_minhash_batch_kernel_bit_identical)."""
-    from ..kernels.texthash import minhash_bands_batch
+    string per gram (measured r1) — hence the numpy kernel. It runs ONCE
+    per Arrow batch, straight on the text column's offsets and data buffers
+    (``minhash_bands_arrow``; bit-identical to the per-doc path, pinned by
+    test_minhash_arrow_kernel_bit_identical), and its (n, n_bands) result
+    goes back as one list array: no pandas and no per-document Python
+    object on either side."""
+    from ..kernels.texthash import minhash_bands_arrow
 
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def mh(texts: pd.Series) -> pd.Series:
-        out: list = [[None] * n_bands] * len(texts)
-        datas, idx = [], []
-        for i, t in enumerate(texts):
-            if t is not None:
-                datas.append(t.encode("utf-8"))
-                idx.append(i)
-        if datas:
-            for i, sig in zip(idx, minhash_bands_batch(datas, 8, n_bands).tolist()):
-                out[i] = sig
-        return pd.Series(out, dtype=object)
+    # The hints select a scalar Arrow UDF. They are strings here (postponed
+    # annotations) and resolve through this module's ``pa`` import.
+    @arrow_udf(T.ArrayType(T.LongType()))
+    def mh(texts: pa.Array) -> pa.Array:
+        return minhash_bands_arrow(texts, 8, n_bands)
 
     d = docs.select(id_col, text_col)
     # The kernel stage inherits the scan's partitioning; a single-row-group

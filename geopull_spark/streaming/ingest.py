@@ -11,13 +11,16 @@ Both sinks assign through the batch path's geometry side
 to the batch path's min(block_id) tie-break:
 
 * ``run_assign_stream`` calls ``assign_docs_full`` inside ``foreachBatch``
-  against one cached refine geometry — the batch kernel, tie-break included
-  — writing each batch to its own partition directory (idempotent on retry);
+  on the persisted batch (its files are read once) against one cached
+  refine geometry — the batch kernel, tie-break included — writing each
+  batch to its own partition directory (idempotent on retry);
 * ``windowed_block_counts`` feeds a stateful aggregation, so it uses
   ``assign_stream``: a stream-static join on the parent cell and the closed
-  bbox, refined by one ``mapInArrow`` pass. It emits one row per (doc,
-  containing block); a per-(window, doc) min aggregation chained before the
-  per-block count (multiple stateful operators, Spark 3.5+) breaks the tie.
+  bbox, refined by a filter on a scalar Arrow UDF (a filter keeps the
+  watermark of ``event_ts``, which ``mapInArrow`` drops). It emits one row
+  per (doc, containing block); a per-(window, doc) min aggregation chained
+  before the per-block count (multiple stateful operators, Spark 3.5+)
+  breaks the tie.
 
 Stream output therefore matches ``assign_docs_to_blocks`` row for row.
 ``Trigger.AvailableNow`` drains the backlog batch-style and checkpoints —
@@ -26,9 +29,12 @@ resume is exactly-once on top of the same snapshot-manifest warehouse.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.functions import arrow_udf
 
 from ..functions import cellexpr
 from ..operators.spatial_join import (
@@ -56,27 +62,22 @@ def read_doc_stream(spark: SparkSession, input_dir: str) -> DataFrame:
     )
 
 
-_STREAM_SCHEMA = "doc_id string, block_id string, lon double, lat double, event_ts timestamp"
-
-
-def _refine_stream_pairs(batches):
+@arrow_udf(T.BooleanType())
+def _in_block(lon: pa.Array, lat: pa.Array, block_id: pa.Array,
+              geometry: pa.Array) -> pa.Array:
     """Exact PIP of (doc, block) bbox pairs, one row each: the rows of one
     block share its WKB, so the first row of each block stands for it."""
-    import numpy as np
-    import pyarrow as pa
-
-    for b in batches:
-        px, py = (b.column(c).to_numpy() for c in ("lon", "lat"))
-        ids = b.column("block_id").to_numpy(zero_copy_only=False)
-        _, first, inv = np.unique(ids, return_index=True, return_inverse=True)
-        keep, _, _ = pip_pairs(px, py, first[inv], b.column("g_geometry"))
-        yield b.drop_columns("g_geometry").filter(pa.array(keep))
+    ids = block_id.to_numpy(zero_copy_only=False)
+    _, first, inv = np.unique(ids, return_index=True, return_inverse=True)
+    keep, _, _ = pip_pairs(lon.to_numpy(), lat.to_numpy(), first[inv], geometry)
+    return pa.array(keep)
 
 
 def assign_stream(doc_stream: DataFrame, blocks: DataFrame) -> DataFrame:
     """Stream-static join of ``doc_stream`` (doc_id, lon, lat, event_ts)
     against the refine geometry of ``blocks``: equal parent cell and the doc
-    in the closed bbox, then one exact PIP pass per Arrow batch.
+    in the closed bbox, then a filter on the exact PIP test, one Arrow
+    batch per call. Filter and projections keep ``event_ts``'s watermark.
 
     Emits one row per (doc, containing block) — boundary docs can emit two;
     the caller breaks the tie (see module docstring)."""
@@ -86,9 +87,19 @@ def assign_stream(doc_stream: DataFrame, blocks: DataFrame) -> DataFrame:
     pairs = d.join(
         build_refine_geometry(blocks),
         F.expr("pcell = g_pcell AND lon BETWEEN minx AND maxx AND lat BETWEEN miny AND maxy"),
-    ).select("doc_id", F.col("g_block_id").alias("block_id"), "lon", "lat",
-             "event_ts", "g_geometry")
-    return pairs.mapInArrow(_refine_stream_pairs, _STREAM_SCHEMA)
+    )
+    return pairs.filter(_in_block("lon", "lat", "g_block_id", "g_geometry")).select(
+        "doc_id", F.col("g_block_id").alias("block_id"), "lon", "lat", "event_ts")
+
+
+def _assign_batch(batch: DataFrame, geom: DataFrame) -> DataFrame:
+    """The assigned docs of one micro-batch, with all of its columns.
+    ``assign_docs_full`` reads the batch twice (the assignment, and the
+    ``doc_id`` join that carries ``event_ts`` back), so the batch is
+    persisted here and its files are scanned once; the caller unpersists
+    ``batch`` when done."""
+    return assign_docs_full(batch.persist(), None, geom_cells=geom).filter(
+        F.col("block_id").isNotNull())
 
 
 def run_assign_stream(
@@ -107,9 +118,11 @@ def run_assign_stream(
     geom = build_refine_geometry(blocks).persist()
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
-        assign_docs_full(batch, None, geom_cells=geom).filter(
-            F.col("block_id").isNotNull()
-        ).write.mode("overwrite").parquet(f"{output_dir}/batch_id={batch_id}")
+        try:
+            _assign_batch(batch, geom).write.mode("overwrite").parquet(
+                f"{output_dir}/batch_id={batch_id}")
+        finally:
+            batch.unpersist()
 
     try:
         q = (
@@ -342,13 +355,14 @@ def event_sessions(events: DataFrame, gap: str = "30 minutes",
 def windowed_block_counts(doc_stream: DataFrame, blocks: DataFrame,
                           window: str = "1 hour", watermark: str = "2 hours") -> DataFrame:
     """Watermarked tumbling-window docs-per-block rollup (late data beyond the
-    watermark is dropped; state is bounded). Chained stateful aggregation:
-    per-(window, doc) min-block dedup feeds the per-(window, block) count, so
-    boundary docs are not double-counted (stream/batch parity)."""
-    assigned = assign_stream(doc_stream, blocks)
+    watermark is dropped; state is bounded). The watermark is set on the doc
+    stream before assignment, so every doc advances event time, also one
+    that lies in no block. Chained stateful aggregation: per-(window, doc)
+    min-block dedup feeds the per-(window, block) count, so boundary docs
+    are not double-counted (stream/batch parity)."""
+    assigned = assign_stream(doc_stream.withWatermark("event_ts", watermark), blocks)
     dedup = (
-        assigned.withWatermark("event_ts", watermark)
-        .groupBy(F.window("event_ts", window).alias("w"), F.col("doc_id"))
+        assigned.groupBy(F.window("event_ts", window).alias("w"), F.col("doc_id"))
         .agg(F.min("block_id").alias("block_id"))
     )
     return (

@@ -5,7 +5,8 @@ Runs at sf0.001 (fast, CI-style):
   1. full pipeline → blocks, built once
   2. doc→block assignment via THREE variants: the cogroup plan,
      cogroup+salt_k=4, and the streaming AvailableNow path
-  3. compares md5 fingerprints of the sorted output rows against the frozen
+  3. MinHash signatures and LSH candidate pairs of the documents table
+  4. compares md5 fingerprints of the sorted output rows against the frozen
      hashes below (and each assignment variant against the others)
 
 Exit 0 = all variants byte-identical and equal to the frozen snapshot.
@@ -32,6 +33,8 @@ SF = "/root/testdata/sf0.001"
 FROZEN = {
     "blocks": "5390cb517e6e07341d51d36b0d954d37",
     "assign": "1f85a9e68fc9d1b24ebfb08cd7cf08fc",
+    "minhash_signature": "252a8e20a53fbe381fc54e745173d217",
+    "minhash_lsh_pairs": "9e39ecfc5738e8c25ee16915b4d48190",
 }
 
 
@@ -46,7 +49,7 @@ def main() -> int:
     refresh = "--refresh" in sys.argv
     from pyspark.sql import functions as F
 
-    from geopull_spark.operators import blocker, extract, normalize, spatial_join
+    from geopull_spark.operators import blocker, dedup, extract, normalize, spatial_join
     from geopull_spark.session import get_spark
     from geopull_spark.sources import synth
     from geopull_spark.streaming import ingest
@@ -95,6 +98,12 @@ def main() -> int:
     if len(set(assign_hashes.values())) != 1:
         failures.append(f"assignment variants diverge: {assign_hashes}")
     results["assign"] = assign_hashes["cogroup"]
+
+    # -- MinHash signatures and LSH pairs ----------------------------------
+    texts = spark.read.parquet(f"{SF}/documents.parquet")
+    for name, fn in (("minhash_signature", dedup.minhash_signature),
+                     ("minhash_lsh_pairs", dedup.minhash_lsh_pairs)):
+        results[name] = _md5([tuple(r) for r in fn(texts).collect()])
 
     # -- frozen-snapshot comparison ----------------------------------------
     if refresh:

@@ -863,6 +863,43 @@ def test_minhash_batch_kernel_bit_identical():
             assert list(batch[i]) == single, (k, n_bands, stride, i)
 
 
+def test_minhash_arrow_kernel_bit_identical(monkeypatch):
+    """The Arrow-buffer signature kernel matches the per-document kernel
+    bit for bit: null and empty texts, texts shorter than k, multibyte
+    UTF-8, ``string`` and ``large_string``, sliced arrays (non-zero offset),
+    one text longer than a window and a batch over many windows, at the
+    stride cases of the batch test; once at the module's window size and
+    once at a small prime one, so that window seams fall everywhere."""
+    import pyarrow as pa
+
+    from geopull_spark.kernels import texthash
+    from geopull_spark.kernels.texthash import minhash_bands, minhash_bands_arrow
+
+    rng = np.random.RandomState(17)
+
+    def ascii_text(n):
+        return bytes(rng.randint(32, 127, size=n, dtype=np.uint8).tolist()).decode()
+
+    multi = np.array(list("aé ß日本語🙂x"))
+    texts = [ascii_text(n) for n in [0, 1, 3, 7, 8, 9, 50, 200, 1000, 4096]]
+    texts += [None, "", "aaaaaaaaaaaaaaaa", "héllo wörld", "日本", "🙂🙃", None, "ab"]
+    texts += ["".join(rng.choice(multi, size=3000)), ascii_text(2 * texthash._CHUNK + 123)]
+    texts += [ascii_text(int(n)) for n in rng.randint(0, 1500, size=120)]
+    texts += [None, "".join(rng.choice(multi, size=20))]
+    for k, n_bands, stride in [(8, 8, 1), (5, 4, 1), (8, 8, 3), (3, 2, 2)]:
+        want = [[None] * n_bands if t is None else minhash_bands(t.encode(), k, n_bands, stride)
+                for t in texts]
+        for chunk in (texthash._CHUNK, 97):
+            monkeypatch.setattr(texthash, "_CHUNK", chunk)
+            for typ in (pa.string(), pa.large_string()):
+                arr = pa.array(texts, typ)
+                for lo, hi in ((0, len(texts)), (11, len(texts) - 3), (17, 17), (20, 21)):
+                    got = minhash_bands_arrow(arr[lo:hi], k, n_bands, stride)
+                    assert got.type == pa.list_(pa.int64())
+                    assert got.to_pylist() == want[lo:hi], (k, stride, chunk, typ, lo, hi)
+            monkeypatch.undo()
+
+
 def test_winnow_batch_kernel_bit_identical():
     """The batched winnowing kernel (one rolling-hash pass per sub-group,
     vectorized cross-doc FNV fold) must match the per-document kernel

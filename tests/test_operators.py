@@ -780,6 +780,18 @@ def test_minhash_lsh_pairs_one_python_evaluation(spark):
                          "Exchange hashpartitioning(doc_a, doc_b, 4)"]
 
 
+def test_minhash_signature_null_and_multibyte_text(spark):
+    """Through Spark, a null text yields ``n_bands`` nulls and other texts,
+    empty and multibyte UTF-8 included, the per-document kernel's bands."""
+    from geopull_spark.kernels.texthash import minhash_bands
+
+    texts = {1: None, 2: "", 3: "héllo wörld, 日本語 🙂", 4: "abc", 5: None}
+    d = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    got = {r["doc_id"]: list(r)[1:] for r in dedup.minhash_signature(d, n_bands=4).collect()}
+    assert got == {i: [None] * 4 if t is None else minhash_bands(t.encode(), 8, 4)
+                   for i, t in texts.items()}
+
+
 def test_minhash_signature_spread(spark):
     """A 1-partition input still runs the signature UDF on defaultParallelism
     tasks; an input with >= defaultParallelism partitions is not spread."""

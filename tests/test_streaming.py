@@ -70,38 +70,100 @@ def test_stream_matches_batch_and_resumes(spark, blocks, tmp_path):
     assert out.select("doc_id").distinct().count() == out.count()  # no re-processing
 
 
-def test_windowed_counts(spark, blocks, tmp_path):
-    """Closed-window per-block counts equal batch assignment's per-block
-    counts over the same docs. A late doc (05:00, inside a block so that it
-    reaches the watermark) moves the watermark past the end of the 00:00
-    window, so that window closes in the same AvailableNow run."""
-    batch = spatial_join.assign_docs_to_blocks(
-        _doc_batch(spark, 0, 150).select("doc_id", "lon", "lat"), blocks
-    ).collect()
-    want = Counter(r["block_id"] for r in batch)
-
+def _closed_window_counts(spark, tmp_path, blocks, late_lon, late_lat):
+    """Run ``windowed_block_counts`` with AvailableNow over docs 0..149 at
+    00:00 plus one late doc at 05:00 and (late_lon, late_lat); return the
+    rows of the memory sink."""
     in_dir = str(tmp_path / "in2")
     os.makedirs(in_dir, exist_ok=True)
     _doc_batch(spark, 0, 150).write.mode("append").parquet(in_dir)
-    late = spark.createDataFrame([("late", batch[0]["lon"], batch[0]["lat"])],
-                                 ["doc_id", "lon", "lat"])
+    late = spark.createDataFrame([("late", late_lon, late_lat)], ["doc_id", "lon", "lat"])
     late.select("doc_id", "lon", "lat",
                 F.to_timestamp(F.lit("2026-01-01 05:00:00")).alias("event_ts")
                 ).write.mode("append").parquet(in_dir)
     stream = ingest.read_doc_stream(spark, in_dir)
     counts = ingest.windowed_block_counts(stream, blocks)
+    name = f"wincounts_{tmp_path.name}"
     q = (
         counts.writeStream.format("memory")
-        .queryName("wincounts")
+        .queryName(name)
         .outputMode("append")
         .option("checkpointLocation", str(tmp_path / "ckpt2"))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
-    got = spark.sql("SELECT window_start, block_id, n_docs FROM wincounts").collect()
+    return spark.sql(f"SELECT window_start, block_id, n_docs FROM {name}").collect()
+
+
+def test_windowed_counts(spark, blocks, tmp_path):
+    """Closed-window per-block counts equal batch assignment's per-block
+    counts over the same docs. A late doc (05:00, at an assigned doc's
+    point) moves the watermark past the end of the 00:00 window, so that
+    window closes in the same AvailableNow run."""
+    batch = spatial_join.assign_docs_to_blocks(
+        _doc_batch(spark, 0, 150).select("doc_id", "lon", "lat"), blocks
+    ).collect()
+    want = Counter(r["block_id"] for r in batch)
+    got = _closed_window_counts(spark, tmp_path, blocks, batch[0]["lon"], batch[0]["lat"])
     assert {str(r["window_start"]) for r in got} == {"2026-01-01 00:00:00"}
     assert want and {r["block_id"]: r["n_docs"] for r in got} == want
+
+
+def test_windowed_counts_late_doc_outside_blocks(spark, blocks, tmp_path):
+    """A late doc that lies in no block still advances event time: the
+    watermark sits on the doc stream, before assignment, so the 00:00
+    window closes and its counts equal batch assignment's."""
+    assert not spatial_join.assign_docs_to_blocks(
+        spark.createDataFrame([("late", 0.1, 0.1)], ["doc_id", "lon", "lat"]), blocks
+    ).collect()
+    batch = spatial_join.assign_docs_to_blocks(
+        _doc_batch(spark, 0, 150).select("doc_id", "lon", "lat"), blocks
+    ).collect()
+    got = _closed_window_counts(spark, tmp_path, blocks, 0.1, 0.1)
+    assert {str(r["window_start"]) for r in got} == {"2026-01-01 00:00:00"}
+    assert {r["block_id"]: r["n_docs"] for r in got} == Counter(r["block_id"] for r in batch)
+
+
+def _file_scans(df) -> int:
+    """Run ``df`` once and count the file scans in its executed plan,
+    entering each cached relation once: a relation read by several scans is
+    built, and so reads its files, once."""
+    df.collect()
+    jvm = df.sparkSession._jvm
+    seen, n, todo = set(), 0, [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+        elif cls.endswith("QueryStageExec"):
+            todo.append(node.plan())
+        elif cls == "InMemoryTableScanExec":
+            builder = node.relation().cacheBuilder()
+            if jvm.System.identityHashCode(builder) not in seen:
+                seen.add(jvm.System.identityHashCode(builder))
+                todo.append(builder.cachedPlan())
+        else:
+            n += cls == "FileSourceScanExec"
+            kids = node.children()
+            todo.extend(kids.apply(i) for i in range(kids.size()))
+    return n
+
+
+def test_assign_batch_scans_its_files_once(spark, blocks, tmp_path):
+    """One micro-batch of ``run_assign_stream`` reads its files once,
+    although ``assign_docs_full`` uses the batch on both sides of its
+    ``doc_id`` join; pinned on a static parquet read of the same shape."""
+    in_dir = str(tmp_path / "scan_once")
+    _doc_batch(spark, 0, 100).write.parquet(in_dir)
+    geom = spatial_join.build_refine_geometry(blocks).persist()
+    batch = spark.read.parquet(in_dir)
+    try:
+        assert _file_scans(ingest._assign_batch(batch, geom)) == 1
+    finally:
+        batch.unpersist()
+        geom.unpersist()
 
 
 def test_boundary_doc_parity_and_uniqueness(spark, blocks, tmp_path):
