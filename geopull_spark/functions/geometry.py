@@ -13,6 +13,8 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
@@ -54,6 +56,20 @@ def st_bbox(wkb_col: pd.Series) -> pd.DataFrame:
         if buf is not None:
             arr[i] = _wkb.bounds(_wkb.loads(bytes(buf)))
     return pd.DataFrame(arr, columns=["minx", "miny", "maxx", "maxy"])
+
+
+def ensure_bbox(df: DataFrame) -> DataFrame:
+    """``df`` with (minx, miny, maxx, maxy) columns: as is when it carries
+    them (blocks and land from the pipeline do), else computed from
+    ``geometry`` by :func:`st_bbox` in one Arrow pass."""
+    if "minx" in df.columns:
+        return df
+    b = df.withColumn("_bb", st_bbox(F.col("geometry")))
+    return b.select(
+        "*",
+        F.col("_bb.minx").alias("minx"), F.col("_bb.miny").alias("miny"),
+        F.col("_bb.maxx").alias("maxx"), F.col("_bb.maxy").alias("maxy"),
+    ).drop("_bb")
 
 
 def st_cell(lon_col, lat_col, res: int):

@@ -16,7 +16,8 @@ are cogrouped and the whole DAG runs as one Arrow-batched kernel per region:
   _residual_area_check(blocker.py:166-200): add back land − ∪blocks
   geohash ids    (blocker.py:296-322): representative point → geohash12 →
                  georank (cumcount per geohash, W1) → block_id; here the
-                 flat post stage (_geohash_blocks_fast) plus a region-wide
+                 kernel ends with the batched per-block pass
+                 (_geohash_blocks_fast) and georank is a region-wide
                  window, see below
 
 Determinism fix vs the reference (documented, SURVEY.md W1): pandas
@@ -47,6 +48,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.geometry import ensure_bbox
 from ..kernels import wkb as _wkb
 from ..kernels.area import batch_area_m2, geom_area_m2, segment_sums
 from ..kernels.cells import geohash_encode
@@ -69,6 +71,9 @@ _BBOX_FIELDS = [
     T.StructField("maxy", T.DoubleType()),
 ]
 
+# the reference's block-id geohash length (blocker.py:308-310)
+GEOHASH_PRECISION = 12
+
 # kernel output: block geometry + geohash, pre block-ID (georank is a window)
 BLOCKS_PRE_SCHEMA = T.StructType(
     [
@@ -80,23 +85,6 @@ BLOCKS_PRE_SCHEMA = T.StructType(
         T.StructField("rep_lat", T.DoubleType()),
     ]
     + _BBOX_FIELDS
-)
-
-# raw group-kernel output (r6): faces + areas only. The per-block
-# post-processing (representative point, geohash, canonical normalize,
-# bounds) is embarrassingly parallel, so it moved OUT of the per-(region,
-# part) cogroup into a flat stage whose parallelism is bounded by cores,
-# not by group count — the group-serial portion of the kernel shrinks to
-# noding + face extraction + the area-gated corrections (which need the
-# whole group's areas and cannot leave). Profiled at 1200 streets/region:
-# the post chain was ~55% of kernel time, all of it previously serialized
-# per region.
-BLOCKS_RAW_SCHEMA = T.StructType(
-    [
-        T.StructField("region_code", T.StringType()),
-        T.StructField("geometry", T.BinaryType()),
-        T.StructField("area_m2", T.DoubleType()),
-    ]
 )
 
 BLOCKS_SCHEMA = T.StructType(
@@ -183,26 +171,14 @@ def _remove_overlaps(blocks: list, areas: list, land_area: float) -> tuple[list,
     return out, out_areas
 
 
-def _post_blocks_batches(batches):
-    """Flat per-block post-processing (r6): raw face WKB → rep point,
-    geohash, canonical normalize, bounds. Each Arrow batch is decoded once
-    into a flat geometry batch (float64 WKB round-trips exactly)."""
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        yield _geohash_blocks_fast(
-            _wkb.decode(pdf["geometry"]), list(pdf["area_m2"]), list(pdf["region_code"])
-        )
-
-
 # ---------------------------------------------------------------------------
-# batched per-block post-processing
+# batched per-block finish of the group kernel
 #
 # Per block, the chain is representative point, canonical normalize (ring
 # orientation + rotation to the lexicographic-min vertex), WKB and bounds.
-# Called once per block, numpy's fixed call overhead dominated the post
-# stage, so the code below runs each step once per batch over the flat
-# coordinates of every simple block (one ring, ≥ 4 vertices). It computes
+# Called once per block, numpy's fixed call overhead dominated it, so the
+# code below runs each step once per group over the flat coordinates of
+# every simple block (one ring, ≥ 4 vertices). It computes
 # the SAME values as the per-block functions:
 #   * elementwise float ops (+,-,*,/ and comparisons) are IEEE-exact per
 #     element regardless of array shape → identical batched or not;
@@ -367,15 +343,13 @@ def _polygon_batch(coords: np.ndarray, ring_lens: np.ndarray) -> _wkb.GeomBatch:
     return _wkb.GeomBatch(three, ones, three, ones, roff, coords)
 
 
-def _geohash_blocks_fast(blocks, areas: list, regions: list,
-                         precision: int = 12) -> pd.DataFrame:
+def _geohash_blocks_fast(batch: _wkb.GeomBatch, areas: list, regions: list) -> pd.DataFrame:
     """Per-block rep point, geohash, canonical normalize, WKB and bounds
-    over a flat batch (``blocks`` may also be a list of tuple geometries).
-    Vectorized over every simple single-ring Polygon; everything else
-    (holes, multi parts, degenerate scanlines) routes through the
-    per-block functions. Bit-identical to the per-block reference in
-    tests/test_pipeline.py (``test_post_blocks_batched_bit_identical``)."""
-    batch = blocks if isinstance(blocks, _wkb.GeomBatch) else _wkb.from_geoms(blocks)
+    over a flat batch: ``BLOCKS_PRE_SCHEMA`` rows. Vectorized over every
+    simple single-ring Polygon; everything else (holes, multi parts,
+    degenerate scanlines) routes through the per-block functions.
+    Bit-identical to the per-block reference in tests/test_pipeline.py
+    (``test_post_blocks_batched_bit_identical``)."""
     n = len(batch)
     if n == 0:
         return pd.DataFrame(columns=BLOCKS_PRE_SCHEMA.fieldNames())
@@ -408,7 +382,7 @@ def _geohash_blocks_fast(blocks, areas: list, regions: list,
         norm = _wkb.from_geoms([normalize_geom(g) for g in others])
         wkbs[o_idx] = _wkb.encode(norm)
         bounds[o_idx] = _wkb.batch_bounds(norm)
-    ghs = geohash_encode(rep_y, rep_x, precision)
+    ghs = geohash_encode(rep_y, rep_x, GEOHASH_PRECISION)
     return pd.DataFrame(
         {
             "region_code": regions,
@@ -428,7 +402,7 @@ def _geohash_blocks_fast(blocks, areas: list, regions: list,
 def _block_cogroup(land_pdf: pd.DataFrame, lines_pdf: pd.DataFrame) -> pd.DataFrame:
     """One kernel invocation per (region, land_part) group."""
     if len(land_pdf) == 0:
-        return pd.DataFrame(columns=BLOCKS_RAW_SCHEMA.fieldNames())
+        return pd.DataFrame(columns=BLOCKS_PRE_SCHEMA.fieldNames())
     region = land_pdf["region_code"].iloc[0]
     land_parts = []
     for buf in land_pdf["geometry"]:
@@ -485,14 +459,7 @@ def _block_cogroup(land_pdf: pd.DataFrame, lines_pdf: pd.DataFrame) -> pd.DataFr
         blocks = blocks + residue
         areas = areas + [geom_area_m2(p) for p in residue]
 
-    return pd.DataFrame(
-        {
-            "region_code": region,
-            "geometry": _wkb.encode(_wkb.from_geoms(blocks)),
-            "area_m2": areas,
-        },
-        columns=BLOCKS_RAW_SCHEMA.fieldNames(),
-    )
+    return _geohash_blocks_fast(_wkb.from_geoms(blocks), areas, [region] * len(blocks))
 
 
 def build_blocks(land: DataFrame, lines: DataFrame) -> DataFrame:
@@ -516,22 +483,9 @@ def build_blocks_pre(land: DataFrame, lines: DataFrame) -> DataFrame:
     (no geometry), re-broadcast as a literal relation and joined on region
     plus closed-bbox overlap; a line crossing several parts is clipped in
     each. The same collect sizes the cogroup's partition count."""
-    if "minx" not in land.columns:
-        # externally-sourced land without bbox columns: one Arrow pass. The
-        # normalize stage emits them in-kernel, so the pipeline path never
-        # pays this extra Python stage (round 3 — ~0.3 cpu-s/task runner
-        # overhead per stage, a measured fixed floor at every core count).
-        from ..functions.geometry import st_bbox
-
-        land = (
-            land.select("region_code", "part_id", "geometry")
-            .withColumn("_bb", st_bbox(F.col("geometry")))
-            .select(
-                "region_code", "part_id", "geometry",
-                F.col("_bb.minx").alias("minx"), F.col("_bb.miny").alias("miny"),
-                F.col("_bb.maxx").alias("maxx"), F.col("_bb.maxy").alias("maxy"),
-            )
-        )
+    # externally-sourced land may lack the bbox columns; the normalize stage
+    # emits them in-kernel, so the pipeline path adds no Python stage here
+    land = ensure_bbox(land)
     # normalize the key dtype: externally-built land frames may carry int64
     # part ids while the literal part-box relation (and LAND_SCHEMA) use
     # int32 — a dtype mismatch between the cogroup sides would silently
@@ -588,17 +542,11 @@ def build_blocks_pre(land: DataFrame, lines: DataFrame) -> DataFrame:
     np_ = min(dp * 16, max(dp * 2, 2 * len(pb_rows)))
     land_g = land.repartition(np_, "region_code", "part_id")
     lines_g = lines_parts.repartition(np_, "l_region", "l_part")
-    raw = (
+    return (
         land_g.groupBy("region_code", "part_id")
         .cogroup(lines_g.groupBy("l_region", "l_part"))
-        .applyInPandas(_block_cogroup, BLOCKS_RAW_SCHEMA)
+        .applyInPandas(_block_cogroup, BLOCKS_PRE_SCHEMA)
     )
-    # flat per-block post-processing on dp partitions: the round-robin
-    # repartition decouples its parallelism from the group count (the
-    # blocks-side 8→32 scaling limiter — one fat region no longer owns its
-    # blocks' rep-point/normalize work), and dp tasks keep the Python-stage
-    # floor at one wave
-    return raw.repartition(dp).mapInPandas(_post_blocks_batches, BLOCKS_PRE_SCHEMA)
 
 
 def assign_block_ids(pre: DataFrame) -> DataFrame:

@@ -132,21 +132,6 @@ def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text", n_bands: int = 8,
     )
 
 
-def lsh_bucket_stats(docs: DataFrame, text_col: str = "text", n_bands: int = 8,
-                     id_col: str = "doc_id", bucket_cap: int = 128) -> DataFrame:
-    """Diagnostic: per-band bucket-size distribution + how many buckets the
-    ``bucket_cap`` routed to the star path. Run eagerly before a large dedup
-    to pick ``bucket_cap`` / decide whether to pre-strip exact dups."""
-    sizes = _band_rows(docs, text_col, n_bands, id_col).groupBy("band", "mh").agg(
-        F.count("*").alias("n"))
-    return sizes.groupBy("band").agg(
-        F.count("*").alias("n_buckets"),
-        F.max("n").alias("max_bucket"),
-        F.sum(F.when(F.col("n") > bucket_cap, 1).otherwise(0)).alias("n_oversize"),
-        F.sum(F.when(F.col("n") >= 2, 1).otherwise(0)).alias("n_collision"),
-    )
-
-
 def simhash64(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """64-bit SimHash: per-bit majority vote over whitespace-token hashes."""
     toks = docs.select(

@@ -46,24 +46,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import cellexpr
-from ..functions.geometry import st_bbox, st_cell, st_k_ring
+from ..functions.geometry import ensure_bbox, st_cell, st_k_ring
 from ..kernels import cells as _cells
 
 INDEX_RES = 14   # ~0.022° × equal-area tiles at the equator
 PARENT_RES = 7   # refine group: ~2.8° tiles (picked by a 4-core A/B over 6/7/8/10)
-
-
-def _ensure_bbox(blocks: DataFrame) -> DataFrame:
-    """Blocks carry (minx,miny,maxx,maxy) from the blocker; compute via the
-    WKB kernel only for externally-sourced frames that lack them."""
-    if "minx" in blocks.columns:
-        return blocks
-    b = blocks.withColumn("_bb", st_bbox(F.col("geometry")))
-    return b.select(
-        "*",
-        F.col("_bb.minx").alias("minx"), F.col("_bb.miny").alias("miny"),
-        F.col("_bb.maxx").alias("maxx"), F.col("_bb.maxy").alias("maxy"),
-    ).drop("_bb")
 
 
 def build_block_cell_index(blocks: DataFrame, res: int = INDEX_RES) -> DataFrame:
@@ -74,7 +61,7 @@ def build_block_cell_index(blocks: DataFrame, res: int = INDEX_RES) -> DataFrame
     resolution for oversized bboxes. A pure function of the blocks snapshot,
     so build it once per snapshot. No assignment path reads it: ``bench.py``
     and the ``world_build`` benchmark still build it."""
-    covered = cellexpr.with_cover_cells(_ensure_bbox(blocks), res)
+    covered = cellexpr.with_cover_cells(ensure_bbox(blocks), res)
     return covered.select("cell", "cell_res", "region_code", "block_id")
 
 
@@ -90,7 +77,7 @@ def build_refine_geometry(blocks: DataFrame) -> DataFrame:
     covers, hash-partitioned on g_pcell. A pure function of the blocks
     snapshot: build and cache it once per snapshot. The cached copy keeps
     its partitioning, so each doc batch shuffles only itself."""
-    blocks = _ensure_bbox(blocks)
+    blocks = ensure_bbox(blocks)
     return cellexpr.with_cover_cells(
         blocks.select(
             F.col("block_id").alias("g_block_id"),
@@ -339,7 +326,7 @@ def cell_tile_areas(blocks: DataFrame, res: int = INDEX_RES) -> DataFrame:
             yield pd.DataFrame({"cell": cells_out, "area": area_out})
 
     return (
-        _ensure_bbox(blocks)
+        ensure_bbox(blocks)
         .select("minx", "miny", "maxx", "maxy")
         .mapInPandas(gen, "cell long, area double")
         .groupBy("cell")

@@ -1,4 +1,4 @@
-"""Single-threaded timing of the blocker's two Python kernels on the driver.
+"""Single-threaded timing of the blocker's Python group kernel on the driver.
 
     python scripts/time_blocker_kernels.py --seed 1 --reps 5
 
@@ -9,13 +9,12 @@ Builds the ``world_build`` inputs of perfbench (8 regions × 600 streets),
 runs extract and normalize once through Spark, and collects the normalized
 land and the extracted lines. Lines are routed to land parts on the driver
 with the same closed-bbox test as ``blocker.build_blocks_pre``. Then, per
-rep, it calls ``blocker._block_cogroup`` once per (region, part) group and
-``blocker._post_blocks_batches`` over all raw blocks in Arrow-sized batches,
-in this process, with no Spark job in the timed region.
+rep, it calls ``blocker._block_cogroup`` once per (region, part) group in
+this process, with no Spark job in the timed region.
 
-Prints the median seconds of each kernel and a digest of the sorted
-(geometry md5, area_m2) pairs of the post-stage output, so that two
-checkouts can be compared: run the same script in each, alternating.
+Prints the median seconds of the kernel and a digest of the sorted
+(geometry md5, area_m2) pairs of its output blocks, so that two checkouts
+can be compared: run the same script in each, alternating.
 """
 
 from __future__ import annotations
@@ -31,7 +30,6 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 REGIONS, STREETS = 8, 600  # perfbench WorldBuild
-BATCH_ROWS = 10_000  # spark.sql.execution.arrow.maxRecordsPerBatch
 
 
 def collect_groups(seed: int):
@@ -86,30 +84,20 @@ def main() -> int:
     from geopull_spark.operators import blocker
 
     groups = collect_groups(args.seed)
-    t_block, t_post = [], []
+    t_block = []
     for _ in range(args.reps):
         t0 = time.perf_counter()
-        raw = pd.concat([blocker._block_cogroup(lp, ln) for lp, ln in groups],
-                        ignore_index=True)
-        t1 = time.perf_counter()
-        batches = [raw.iloc[i:i + BATCH_ROWS] for i in range(0, len(raw), BATCH_ROWS)]
-        post = pd.concat(list(blocker._post_blocks_batches(iter(batches))),
-                         ignore_index=True)
-        t2 = time.perf_counter()
-        t_block.append(t1 - t0)
-        t_post.append(t2 - t1)
+        blocks = pd.concat([blocker._block_cogroup(lp, ln) for lp, ln in groups],
+                           ignore_index=True)
+        t_block.append(time.perf_counter() - t0)
 
     h = hashlib.md5()
     for g, a in sorted((hashlib.md5(bytes(g)).hexdigest(), float(a).hex())
-                       for g, a in zip(post["geometry"], post["area_m2"])):
+                       for g, a in zip(blocks["geometry"], blocks["area_m2"])):
         h.update(f"{g} {a}\n".encode())
-    block_s, post_s = statistics.median(t_block), statistics.median(t_post)
-    print(f"groups {len(groups)}  blocks {len(post)}  reps {args.reps}")
-    print(f"_block_cogroup        median {block_s:.3f} s  runs "
+    print(f"groups {len(groups)}  blocks {len(blocks)}  reps {args.reps}")
+    print(f"_block_cogroup  median {statistics.median(t_block):.3f} s  runs "
           + " ".join(f"{t:.3f}" for t in t_block))
-    print(f"_post_blocks_batches  median {post_s:.3f} s  runs "
-          + " ".join(f"{t:.3f}" for t in t_post))
-    print(f"total                 median {block_s + post_s:.3f} s")
     print(f"digest {h.hexdigest()}")
     return 0
 

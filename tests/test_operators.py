@@ -807,6 +807,58 @@ def test_minhash_signature_spread(spark):
     assert not any("RoundRobinPartitioning" in n for n in wide)
 
 
+def test_doc_fingerprint_null_and_multibyte_text(spark):
+    """Through Spark, a null text yields null fingerprint fields and other
+    texts, empty, shorter than k and multibyte UTF-8 included, the
+    per-document kernel's values."""
+    from geopull_spark.kernels.texthash import winnow_fingerprint
+
+    texts = {1: None, 2: "", 3: "héllo wörld, 日本語 🙂 and more", 4: "abc", 5: None}
+    d = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    fp = text.doc_fingerprint(d)
+    assert fp.schema["n_fingerprint_grams"].dataType.typeName() == "integer"
+    got = {r["doc_id"]: (r["fingerprint"], r["n_fingerprint_grams"]) for r in fp.collect()}
+    assert got == {i: (None, None) if t is None else winnow_fingerprint(t.encode(), 8, 4)
+                   for i, t in texts.items()}
+
+
+@pytest.fixture(scope="module")
+def block_inputs(spark):
+    """Cached (land, lines) of a small synthetic world, so that an executed
+    plan starts at the blocker."""
+    from geopull_spark.operators import extract, normalize
+
+    ways = synth.gen_osm_ways(spark, streets_per_region=25)
+    land = normalize.normalize_land(
+        extract.extract_admin(ways), extract.extract_water(ways), synth.gen_coastline(spark)
+    ).cache()
+    return land, extract.extract_linestrings(ways).cache()
+
+
+def test_build_blocks_pre_runs_one_python_stage(block_inputs):
+    """The polygonize cogroup emits finished blocks: one
+    FlatMapCoGroupsInPandas, and no MapInPandas stage behind a round-robin
+    exchange."""
+    from geopull_spark.operators import blocker
+
+    nodes = _executed_nodes(blocker.build_blocks_pre(*block_inputs))
+    assert sum(n.startswith("FlatMapCoGroupsInPandas") for n in nodes) == 1
+    assert not any(n.startswith("MapInPandas") for n in nodes)
+    assert not any("RoundRobinPartitioning" in n for n in nodes)
+
+
+def test_build_blocks_same_rows_without_land_bbox(block_inputs):
+    """Land without its bbox columns gets them from ``ensure_bbox`` and
+    yields the same block rows."""
+    from geopull_spark.operators import blocker
+
+    land, lines = block_inputs
+    bare = land.drop("minx", "miny", "maxx", "maxy")
+    want = sorted(map(tuple, blocker.build_blocks(land, lines).collect()))
+    got = sorted(map(tuple, blocker.build_blocks(bare, lines).collect()))
+    assert len(want) > 3 and got == want
+
+
 def test_simhash_hot_bucket_bounded(spark):
     """Same star routing for simhash: 300 identical docs > bucket_cap → k-1
     star pairs with hamming 0, single component downstream."""

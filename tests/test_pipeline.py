@@ -666,9 +666,9 @@ def _geohash_blocks(blocks: list, areas: list, regions: list,
 
 
 def test_post_blocks_batched_bit_identical(world):
-    """r6 batched post-processing (_geohash_blocks_fast) must be
-    bit-identical to the per-block reference (_geohash_blocks) on real
-    pipeline blocks (grid + diagonal + residual shapes) AND on adversarial
+    """The group kernel's batched per-block finish (_geohash_blocks_fast)
+    must be bit-identical to the per-block reference (_geohash_blocks) on
+    real pipeline blocks (grid + diagonal + residual shapes) AND on adversarial
     inputs: holed polygons, collinear-vertex rings, duplicate consecutive
     vertices, a near-zero-area sliver (sign-guard fallback), and a
     vertex-level scanline (nudge path)."""
@@ -709,7 +709,7 @@ def test_post_blocks_batched_bit_identical(world):
     regions += ["ZZZ"] * len(extra)
 
     ref = _geohash_blocks(geoms, areas, regions)
-    fast = _geohash_blocks_fast(geoms, areas, regions)
+    fast = _geohash_blocks_fast(kwkb.from_geoms(geoms), areas, regions)
     assert len(ref) == len(fast) == len(geoms)
     for col in ref.columns:
         a, b = list(ref[col]), list(fast[col])
